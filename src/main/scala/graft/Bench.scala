@@ -36,6 +36,18 @@ object Bench {
     graft.operators.Multimodal.invalidate()
   }
 
+  /** One untimed warm-up call. A failure is printed to stderr with the
+    * gate's name and counted by the caller, never swallowed; returns
+    * whether the call succeeded.
+    */
+  private[graft] def warm(tag: String, gate: String)(body: => Unit): Boolean =
+    try { body; true }
+    catch {
+      case e: Throwable =>
+        System.err.println(s"[$tag] warm-up $gate failed: $e")
+        false
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -72,28 +84,20 @@ object Bench {
       }
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try materialize(fn(spark, warmDir))
-      catch { case _: Throwable => () }
+    val smallWarmupFailures = SparkEntry.queries.count { case (name, fn) =>
+      !warm("bench", name)(materialize(fn(spark, warmDir)))
     }
     // untimed steady-state pass on the benchmark corpus itself: the
     // first sfDir execution still pays C2 JIT of the generated code
     // and AQE statistics warm-in (measured ~35% above the third run);
     // JMH-style, the timed runs below measure steady state
     resetCaches()
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try materialize(fn(spark, sfDir))
-      catch { case _: Throwable => () }
+    val warmupFailures = smallWarmupFailures + SparkEntry.queries.count { case (name, fn) =>
+      !warm("bench", name)(materialize(fn(spark, sfDir)))
     }
 
     // min of two timed runs per query: the host is multi-tenant, so a
@@ -233,7 +237,7 @@ object Bench {
       .map(p => s""","min_with":"${jstr(p)}"""")
       .getOrElse("")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"bundles":$bs,"sf":"${jstr(sfDir)}"$minWithField}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"warmup_failures":$warmupFailures,"queries":$qs,"bundles":$bs,"sf":"${jstr(sfDir)}"$minWithField}"""
     // Tear the engine down BEFORE printing: the eviction gates leave
     // state-store maintenance daemons whose shutdown stacktraces
     // (`RpcEnv already stopped`) trailed the final stdout line in the

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scratch profiler (round 14): `graft.Bench`'s exact timing
   * methodology — sf0.001 warmup, untimed steady-state pass on the
@@ -34,25 +34,15 @@ object BenchSome {
     val names = args.toSeq
     require(names.nonEmpty, "usage: BenchSome <gate> [gate ...]")
     names.foreach(n => require(SparkEntry.queries.contains(n), s"unknown gate $n"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val warmDir = "/root/testdata/sf0.001"
-    names.foreach { n =>
-      try materialize(SparkEntry.queries(n)(spark, warmDir))
-      catch { case _: Throwable => () }
-    }
+    val smallWarmupFailures =
+      names.count(n => !Bench.warm("benchsome", n)(materialize(SparkEntry.queries(n)(spark, warmDir))))
     resetCaches()
-    names.foreach { n =>
-      try materialize(SparkEntry.queries(n)(spark, sfDir))
-      catch { case _: Throwable => () }
-    }
+    val warmupFailures = smallWarmupFailures +
+      names.count(n => !Bench.warm("benchsome", n)(materialize(SparkEntry.queries(n)(spark, sfDir))))
     def timeAll(): Map[String, Double] = {
       resetCaches()
       names.map { n =>
@@ -74,8 +64,9 @@ object BenchSome {
       val m = if (a < 0 || b < 0) -1.0 else math.min(a, b)
       println(f"[benchsome] $n min=$m%.3f (run1=$a%.3f run2=$b%.3f)")
     }
+    println(s"[benchsome] warm-up failures: $warmupFailures")
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => System.err.println(s"[benchsome] StateStore.stop: $e") }
     spark.stop()
   }
 }

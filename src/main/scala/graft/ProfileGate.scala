@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Scratch profiler (round 14): job-level decomposition of a gate's
   * wall time. Runs the named gates with Bench's warmup discipline,
@@ -19,13 +18,7 @@ object ProfileGate {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = args.toSeq
     require(names.nonEmpty, "usage: ProfileGate <gate> [gate ...]")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
@@ -57,13 +50,19 @@ object ProfileGate {
       SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
 
     // Bench-style warmup: sf0.001 pass + one steady-state pass on sfDir
+    var warmupFailures = 0
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[profilegate] warm-up $n failed: $e")
+          warmupFailures += 1
+      }
     }
     resetCaches()
-    names.foreach { n => try materialize(n) catch { case _: Throwable => () } }
+    warmupFailures += names.count(n => !Bench.warm("profilegate", n)(materialize(n)))
+    println(s"[profilegate] warm-up failures: $warmupFailures")
 
     names.foreach { n =>
       resetCaches()
@@ -89,7 +88,7 @@ object ProfileGate {
       println(f"[gaps] driver/planning gaps between jobs: $gap%.3f s")
     }
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => System.err.println(s"[profilegate] StateStore.stop: $e") }
     spark.stop()
   }
 }

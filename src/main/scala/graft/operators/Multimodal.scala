@@ -614,10 +614,10 @@ object Multimodal {
     // sides no longer need fresh synthesis lineages.
     val fps = {
       import spark.implicits._
-      phashMediaTable(spark, dir, blocks)
-        .mapPartitions(_.flatMap(fingerprintOf(_, blocks))) // decoder amortizes per partition
-        .toDF("id", "bands")
-        .localCheckpoint()
+      checkpointFingerprints(
+        phashMediaTable(spark, dir, blocks)
+          .mapPartitions(_.flatMap(fingerprintOf(_, blocks))) // decoder amortizes per partition
+          .toDF("id", "bands"))
     }
     Skew
       .saltedBlockJoin(withBandKeys(fps, "a"), withBandKeys(fps, "b"), "__bucket", "doc_a", targetRows)
@@ -626,6 +626,24 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
       .distinct()
+  }
+
+  /** The persisted RDDs behind the fingerprint proxies that pair
+    * builds ([[perceptualNearDupPairs]], [[audioNearDupPairs]]) have
+    * local-checkpointed since the last [[invalidate]]. A pair table
+    * reads its proxy for as long as it lives, so the reset releases
+    * them: Spark's cleaner would find one only after a garbage
+    * collection, and a reset must leave nothing persisted.
+    */
+  private val fingerprintCheckpoints = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]
+
+  private def checkpointFingerprints(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint()
+    cp.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => fingerprintCheckpoints.add(r.rdd)
+      case _ => ()
+    }
+    cp
   }
 
   private val phashPairsCache = new graft.util.SessionCache[String, DataFrame]
@@ -647,8 +665,10 @@ object Multimodal {
       )
     }
 
-  /** Drop the memoized pair artifact (benchmark hygiene — the
-    * key-based by-name cleanup contract of `Dedup.invalidate`).
+  /** Drop the memoized pair artifacts (benchmark hygiene — the
+    * key-based by-name cleanup contract of `Dedup.invalidate`) and the
+    * fingerprint checkpoints under them. A pair frame built before the
+    * call can no longer be read after it.
     */
   def invalidate(): Unit = {
     phashPairsCache.invalidateKeys { (spark, dir) =>
@@ -659,6 +679,7 @@ object Multimodal {
       graft.util.NamedArtifact.drop(
         spark, graft.util.NamedArtifact.viewName("graft_audio_pairs", dir))
     }
+    Iterator.continually(fingerprintCheckpoints.poll()).takeWhile(_ != null).foreach(_.unpersist())
   }
 
   /** The pair gate's entry point: the shared artifact, so the pair
@@ -999,10 +1020,10 @@ object Multimodal {
     // WAV synthesis + decode passes per build)
     val fps = {
       import spark.implicits._
-      audioMediaTable(spark, dir, blocks)
-        .mapPartitions(_.flatMap(audioFingerprintOf(_, blocks)))
-        .toDF("id", "bands")
-        .localCheckpoint()
+      checkpointFingerprints(
+        audioMediaTable(spark, dir, blocks)
+          .mapPartitions(_.flatMap(audioFingerprintOf(_, blocks)))
+          .toDF("id", "bands"))
     }
     Skew
       .saltedBlockJoin(withBandKeys(fps, "a"), withBandKeys(fps, "b"), "__bucket", "doc_a", targetRows)

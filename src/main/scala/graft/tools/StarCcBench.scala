@@ -38,12 +38,7 @@ object StarCcBench {
   def main(args: Array[String]): Unit = {
     val ns: Seq[Long] = if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(10000L, 40000L, 160000L, 640000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val runs = 3
     val results = ns.map { n =>

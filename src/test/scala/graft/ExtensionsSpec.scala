@@ -495,6 +495,16 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("invalidate releases the local checkpoints of the perceptual pair builds") {
+    def checkpoints = spark.sparkContext.getPersistentRDDs.values
+      .filter(r => r.isCheckpointed && r.toString.contains("Multimodal.scala"))
+    Multimodal.perceptualNearDupPairsGate(spark, sf).collect()
+    Multimodal.audioNearDupPairsGate(spark, sf).collect()
+    assert(checkpoints.nonEmpty, "the pair builds made no local checkpoint")
+    Multimodal.invalidate()
+    assert(checkpoints.isEmpty, s"left persisted: ${checkpoints.mkString("; ")}")
+  }
+
   test("perceptual near-dup gate surfaces exactly the planted variant pairs") {
     val rows = Multimodal.perceptualNearDupPairs(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))

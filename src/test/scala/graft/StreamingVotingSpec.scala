@@ -1,10 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+
+import org.apache.hadoop.fs.ChecksumException
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.VotingOps
@@ -152,6 +157,65 @@ class StreamingVotingSpec extends AnyFunSuite {
     val parsed = VoteIngest.parse(df, keepCorrupt = true)
     assert(parsed.filter($"_corrupt_record".isNotNull).count() == 1)
     assert(parsed.filter($"voter_id" === "v1").count() == 1)
+  }
+
+  test("a corrupted state file fails the restart loudly instead of serving a wrong count") {
+    import scala.jdk.CollectionConverters._
+    val base = Files.createTempDirectory("graft-state-corrupt")
+    val input = Files.createDirectory(base.resolve("in"))
+    val checkpoint = base.resolve("ckpt").toString
+    def addFile(n: Int, lines: String*): Unit = {
+      val tmp = Files.write(base.resolve(s"$n.tmp"), lines.asJava)
+      Files.move(tmp, input.resolve(s"$n.json"))
+      ()
+    }
+    // the update-mode changelog each run of the query delivers
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    def start() = VotePipeline.aggregates(VotePipeline.parsedStream(spark.readStream.text(input.toString)))._1
+      .writeStream
+      .outputMode("update")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        val rows = batch.select("candidate_id", "total_votes").collect()
+        delivered.synchronized { delivered ++= rows.map(r => r.getString(0) -> r.getLong(1)) }
+        ()
+      }
+      .start()
+    def totals(): Map[String, Long] = delivered.synchronized(delivered.groupMapReduce(_._1)(_._2)(math.max))
+    try {
+      addFile(0, voteJson(1, "Ohio", 1), voteJson(2, "Ohio", 2))
+      val q1 = start()
+      q1.processAllAvailable()
+      addFile(1, voteJson(3, "Ohio", 1))
+      q1.processAllAvailable()
+      q1.stop()
+      assert(totals() == Map("c1" -> 2L, "c2" -> 1L))
+      delivered.synchronized(delivered.clear())
+
+      // unload the state providers, so that the restart reads the files
+      StateStore.stop()
+      val deltas = Files.walk(Paths.get(checkpoint, "state", "0")).iterator().asScala
+        .filter(_.getFileName.toString == "2.delta").toSeq
+      assert(deltas.nonEmpty, "no committed state delta for the second batch")
+      val target = deltas.maxBy(Files.size(_))
+      val bytes = Files.readAllBytes(target)
+      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x10).toByte
+      Files.write(target, bytes)
+
+      addFile(2, voteJson(4, "Ohio", 1))
+      val q2 = start()
+      val err = intercept[StreamingQueryException](q2.processAllAvailable())
+      q2.stop()
+      assert(totals().isEmpty, s"a batch was delivered over corrupt state: ${totals()}")
+      def causes(t: Throwable): Seq[Throwable] = Option(t).toSeq.flatMap(e => e +: causes(e.getCause))
+      assert(
+        causes(err).exists(e => e.isInstanceOf[ChecksumException] ||
+          Option(e.getMessage).exists(_.contains("CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED"))),
+        s"expected a checksum failure, got: ${causes(err).map(_.toString).mkString(" | ")}")
+    } finally {
+      spark.streams.active.foreach(_.stop())
+      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+    }
   }
 
   test("batch and streaming votesPerCandidate agree") {
