@@ -8,6 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (codegen compiled, classes JIT'd, parquet footers cached) rather
   * than first-call Janino compilation — standard benchmark practice
   * (JMH warmup) and representative of a long-lived cluster session.
+  *
+  * `Bench <gate> [gate ...]` times only the named gates, by the same
+  * warm-up, reset, min-of-two and bundle method (a bundle keeps only
+  * its named members): the per-gate A/B instrument. Such a partial run
+  * prints its JSON line but writes no `BENCH_FULL`/`BENCH_LAST`
+  * sidecar, so it cannot overwrite a full run's artifacts.
   */
 object Bench {
 
@@ -16,25 +22,8 @@ object Bench {
     * bare count() would let Catalyst prune projection expressions on
     * map-only queries, flattering them into scan+count timings.
     */
-  private def materialize(df: DataFrame): Unit =
+  private[graft] def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
-
-  /** A timed run must do its own work: memoized source relations and
-    * shared streaming-pass results from a previous run would otherwise
-    * make later runs nearly free.
-    */
-  private def resetCaches(): Unit = {
-    graft.sources.Tables.invalidate()
-    graft.streaming.StreamGate.invalidate()
-    graft.operators.Dedup.invalidate()
-    graft.operators.IvfIndex.invalidate()
-    graft.operators.PqIndex.invalidate()
-    graft.operators.Similarity.invalidate()
-    graft.operators.Sampling.invalidate()
-    graft.operators.RelationalQueries.invalidate()
-    graft.operators.TextAnalysis.invalidate()
-    graft.operators.Multimodal.invalidate()
-  }
 
   /** One untimed warm-up call. A failure is printed to stderr with the
     * gate's name and counted by the caller, never swallowed; returns
@@ -49,6 +38,11 @@ object Bench {
     }
 
   def main(args: Array[String]): Unit = {
+    val partial = args.nonEmpty
+    args.foreach(n => require(SparkEntry.queries.contains(n), s"unknown gate $n; usage: Bench [gate ...]"))
+    val queries =
+      if (partial) SparkEntry.queries.filter { case (name, _) => args.contains(name) }
+      else SparkEntry.queries
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Matched-pair provenance input (the r12 advice): resolve and
@@ -88,15 +82,15 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     val warmDir = "/root/testdata/sf0.001"
-    val smallWarmupFailures = SparkEntry.queries.count { case (name, fn) =>
+    val smallWarmupFailures = queries.count { case (name, fn) =>
       !warm("bench", name)(materialize(fn(spark, warmDir)))
     }
     // untimed steady-state pass on the benchmark corpus itself: the
     // first sfDir execution still pays C2 JIT of the generated code
     // and AQE statistics warm-in (measured ~35% above the third run);
     // JMH-style, the timed runs below measure steady state
-    resetCaches()
-    val warmupFailures = smallWarmupFailures + SparkEntry.queries.count { case (name, fn) =>
+    graft.util.Artifacts.reset()
+    val warmupFailures = smallWarmupFailures + queries.count { case (name, fn) =>
       !warm("bench", name)(materialize(fn(spark, sfDir)))
     }
 
@@ -135,10 +129,10 @@ object Bench {
       "stream_sink" -> Seq(
         "stream_interval_join_sink", "stream_similarity_topk_sink",
         "stream_dedup_sink", "stream_quality_route_sink"),
-    )
+    ).map { case (bname, members) => bname -> members.filter(queries.contains) }.filter(_._2.nonEmpty)
     val bundled: Set[String] = bundles.flatMap(_._2).toSet
     def timeAll(): (Map[String, Double], Map[String, Double]) = {
-      resetCaches()
+      graft.util.Artifacts.reset()
       val times = scala.collection.mutable.Map.empty[String, Double]
       val bundleTimes = scala.collection.mutable.Map.empty[String, Double]
       bundles.foreach { case (bname, members) =>
@@ -150,7 +144,7 @@ object Bench {
           members.foreach { m => if (times(m) >= 0) times(m) += share }
         }
       }
-      SparkEntry.queries.foreach { case (name, fn) =>
+      queries.foreach { case (name, fn) =>
         if (!bundled.contains(name)) times(name) = timeOne(name, fn)
       }
       (times.toMap, bundleTimes.toMap)
@@ -249,6 +243,8 @@ object Bench {
     try spark.stop()
     catch { case e: Throwable => System.err.println(s"[bench] spark.stop: ${e.getMessage}") }
     println(line)
+    // a partial run leaves the full run's sidecars alone
+    if (partial) return
     // belt and braces against any stdout capture limit: persist the
     // identical JSON where the round-end auto-commit will pick it up,
     // so the full per-query map always survives for perf comparisons.

@@ -245,7 +245,7 @@ object Dedup {
       }
       .longValue()
 
-  private val cutoffCache = new graft.util.SessionCache[String, java.lang.Long]
+  private val cutoffCache = graft.util.Artifacts.sessionMemo[String, java.lang.Long](this)
 
   /** LSH band-occupancy histogram: per band, how many buckets exist
     * at each occupancy. THE operational audit of a banding config
@@ -917,19 +917,19 @@ object Dedup {
   // same frame — memoize it per (session, dir) so one run serves both
   // (session-scoped soft cache; an eviction costs a recompute, never
   // correctness). Bench invalidates between timed runs.
-  private val ccCache = new graft.util.SessionCache[String, DataFrame]
+  private val ccCache = graft.util.Artifacts.sessionMemo[String, DataFrame](this)
   // the landed increment's pair table, keyed by (dir, banding params)
   // — see the minhashIncrementalPairs scaladoc for the artifact
   // accounting
-  private val incrPairsCache = new graft.util.SessionCache[String, DataFrame]
-  private val pairsCache = new graft.util.SessionCache[String, DataFrame]
+  private val incrPairsCache = graft.util.Artifacts.memo(this, "graft_minhash_incr")
+  private val pairsCache = graft.util.Artifacts.memo(this, "graft_minhash_pairs")
   // (doc_a, n_a, doc_b, n_b, n_common) over word shingles — the
   // shared two-exchange core of BOTH exact-set scorers
   // ([[ngramJaccardPairs]] and [[ngramContainmentPairs]] differ only
   // in the final projection), memoized like the LSH pair artifact so
   // the corpus explode + posting expansion is paid once per session,
   // not once per scoring gate. Keyed by (dir, k, maxDf).
-  private val commonCountsCache = new graft.util.SessionCache[String, DataFrame]
+  private val commonCountsCache = graft.util.Artifacts.memo(this, "graft_ngram_cc")
 
   /** Memoized, CACHED MinHash-LSH pair set, shared by every consumer
     * of the pair graph (the pair gate itself, the degree histogram,
@@ -944,13 +944,7 @@ object Dedup {
     * write; executor storage stands in for it here.
     */
   def minhashLshPairsShared(spark: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_minhash_pairs", dir),
-        minhashLshPairs(spark, dir),
-      )
-    }
+    pairsCache(spark, dir)(minhashLshPairs(spark, dir))
 
   /** Incremental near-dup pairs — the production shape of MinHash
     * dedup at 100 TB: a nightly increment must NOT rescan the
@@ -1000,13 +994,7 @@ object Dedup {
       threshold: Double = 0.3,
   ): DataFrame = {
     val key = s"$dir|$numHashes|$bands|$threshold"
-    incrPairsCache.getOrElseUpdate(spark, key) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_minhash_incr", key),
-        minhashIncrementalPairsUncached(spark, dir, numHashes, bands, threshold),
-      )
-    }
+    incrPairsCache(spark, key)(minhashIncrementalPairsUncached(spark, dir, numHashes, bands, threshold))
   }
 
   private def minhashIncrementalPairsUncached(
@@ -1139,34 +1127,12 @@ object Dedup {
     }
 
   /** Drop memoized cluster/pair frames (benchmark hygiene). The
-    * persisted pair table's storage blocks are unpersisted eagerly:
+    * persisted pair tables' storage blocks are unpersisted eagerly:
     * dropping only the reference would leave each timed run's blocks
     * pinned in executor storage until GC, skewing the timings
-    * invalidate() exists to keep honest. Key-based (not value-based)
-    * cleanup through the artifact's catalog NAME, which reaches the
-    * cached blocks even when the soft value reference was GC-cleared
-    * before invalidation.
+    * invalidate() exists to keep honest.
     */
-  def invalidate(): Unit = {
-    ccCache.invalidate()
-    cutoffCache.invalidate()
-    pairsCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_minhash_pairs", dir))
-    }
-    incrPairsCache.invalidateKeys { (spark, key) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_minhash_incr", key))
-    }
-    commonCountsCache.invalidateKeys { (spark, key) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_ngram_cc", key))
-    }
-    hotSpanCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_hot_spans", dir))
-    }
-    spanPostingsCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_span_postings", dir))
-    }
-  }
+  def invalidate(): Unit = graft.util.Artifacts.reset(this)
 
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame = {
     val cc = lshClusters(spark, dir)
@@ -1366,22 +1332,6 @@ object Dedup {
       .distinct()
   }
 
-  /** 16-bit variant of [[simhashHammingPairs]] — kept as the
-    * executable spec twin of the saturation failure mode (and of the
-    * 16-bit fingerprint algebra the oracle pins via dedup_simhash).
-    */
-  def simhashHammingPairs16(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
-    val a = docs(spark, dir)
-      .select(col("source"), col("doc_id").as("doc_a"), simhash16(col("text")).as("sh_a"))
-    val b = Tables(spark, dir, "documents")
-      .select(col("source"), col("doc_id").as("doc_b"), simhash16(col("text")).as("sh_b"))
-    a.join(b, Seq("source"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("source"), col("doc_a"), col("doc_b"), col("hamming"))
-  }
-
   /** Exact n-gram Jaccard near-dup pairs via a shingle inverted
     * index: explode distinct shingles, drop shingles occurring in
     * more than maxDf docs (stop-shingles), self-join the index to
@@ -1414,16 +1364,12 @@ object Dedup {
       k: Int,
       maxDf: Int,
   ): DataFrame =
-    commonCountsCache.getOrElseUpdate(spark, s"$dir|$k|$maxDf") {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_ngram_cc", s"$dir|$k|$maxDf"),
-        pairCommonCounts(
-          docs(spark, dir)
-            .filter(size(split(col("text"), " ")) >= k)
-            .select(col("doc_id"), shingles(col("text"), k).as("sh")),
-          maxDf,
-        ),
+    commonCountsCache(spark, s"$dir|$k|$maxDf") {
+      pairCommonCounts(
+        docs(spark, dir)
+          .filter(size(split(col("text"), " ")) >= k)
+          .select(col("doc_id"), shingles(col("text"), k).as("sh")),
+        maxDf,
       )
     }
 
@@ -1836,7 +1782,7 @@ object Dedup {
     * memoized; other shapes compute directly. Dropped in
     * [[invalidate]] (first consumer of a timed run pays the build).
     */
-  private val hotSpanCache = new graft.util.SessionCache[String, DataFrame]
+  private val hotSpanCache = graft.util.Artifacts.memo(this, "graft_hot_spans")
   private def hotSpanShingles(
       spark: SparkSession,
       dir: String,
@@ -1849,14 +1795,7 @@ object Dedup {
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= minDf)
       .select("shash")
-    if (k == 3 && minDf == 3)
-      hotSpanCache.getOrElseUpdate(spark, dir) {
-        graft.util.NamedArtifact.cache(
-          spark,
-          graft.util.NamedArtifact.viewName("graft_hot_spans", dir),
-          build,
-        )
-      }
+    if (k == 3 && minDf == 3) hotSpanCache(spark, dir)(build)
     else build
   }
 
@@ -1886,7 +1825,7 @@ object Dedup {
     * compute the same narrow postings directly. Dropped in
     * [[invalidate]] (first consumer of a timed run pays the build).
     */
-  private val spanPostingsCache = new graft.util.SessionCache[String, DataFrame]
+  private val spanPostingsCache = graft.util.Artifacts.memo(this, "graft_span_postings")
   private def spanPostings(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val toks = split(col("text"), " ")
     def build: DataFrame = docs(spark, dir)
@@ -1908,14 +1847,7 @@ object Dedup {
         }).as("z"),
       )
       .select(col("doc_id"), col("n_tokens"), col("z.pos"), col("z.shash"))
-    if (k == 3)
-      spanPostingsCache.getOrElseUpdate(spark, dir) {
-        graft.util.NamedArtifact.cache(
-          spark,
-          graft.util.NamedArtifact.viewName("graft_span_postings", dir),
-          build,
-        )
-      }
+    if (k == 3) spanPostingsCache(spark, dir)(build)
     else build
   }
 

@@ -34,7 +34,7 @@ object IvfIndex {
   // read many times; executor storage stands in for the table write
   // here). Soft cache: an eviction costs a recompute, never
   // correctness. Bench invalidates between timed runs.
-  private val round1Cache = new graft.util.SessionCache[String, DataFrame]
+  private val round1Cache = graft.util.Artifacts.memo(this, "graft_ivf_round1")
 
   /** Memoized, persisted round-1 assignment (vec_id, embedding,
     * cell): seed centroids from the label column, one
@@ -46,24 +46,20 @@ object IvfIndex {
     * invalidation).
     */
   def round1Assignment(spark: SparkSession, dir: String): DataFrame =
-    round1Cache.getOrElseUpdate(spark, dir) {
+    round1Cache(spark, dir) {
       val emb = graft.sources.Tables.parallel(spark, dir, "embeddings")
       val seeded =
         emb.select(col("vec_id"), col("embedding"), col("label").cast("int").as("cell"))
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_ivf_round1", dir),
-        reassign(emb, centroids(seeded, "cell")),
-      )
+      reassign(emb, centroids(seeded, "cell"))
     }
+
+  /** The catalog view the round-1 artifact of `dir` is cached under. */
+  def round1ViewName(dir: String): String = round1Cache.viewName(dir)
 
   /** Drop the memoized round-1 artifact and its storage blocks
     * (benchmark hygiene; by-name, value-liveness-independent).
     */
-  def invalidate(): Unit =
-    round1Cache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_ivf_round1", dir))
-    }
+  def invalidate(): Unit = graft.util.Artifacts.reset(this)
 
   /** One nearest-centroid (max-cosine) Lloyd reassignment, fully
     * row-wise: the |cells| centroids collapse to a single array row

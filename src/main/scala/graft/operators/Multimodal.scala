@@ -636,6 +636,9 @@ object Multimodal {
     * collection, and a reset must leave nothing persisted.
     */
   private val fingerprintCheckpoints = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]
+  graft.util.Artifacts.onReset(this) {
+    Iterator.continually(fingerprintCheckpoints.poll()).takeWhile(_ != null).foreach(_.unpersist())
+  }
 
   private def checkpointFingerprints(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
@@ -646,7 +649,7 @@ object Multimodal {
     cp
   }
 
-  private val phashPairsCache = new graft.util.SessionCache[String, DataFrame]
+  private val phashPairsCache = graft.util.Artifacts.memo(this, "graft_phash_pairs")
 
   /** Memoized [[perceptualNearDupPairs]] — one persisted copy of the
     * verified pair table serves both consumers (the pair gate and the
@@ -657,30 +660,13 @@ object Multimodal {
     * consumer of a run pays the one build.
     */
   private def phashPairsShared(spark: SparkSession, dir: String): DataFrame =
-    phashPairsCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_phash_pairs", dir),
-        perceptualNearDupPairs(spark, dir),
-      )
-    }
+    phashPairsCache(spark, dir)(perceptualNearDupPairs(spark, dir))
 
-  /** Drop the memoized pair artifacts (benchmark hygiene — the
-    * key-based by-name cleanup contract of `Dedup.invalidate`) and the
+  /** Drop the memoized pair artifacts (benchmark hygiene) and the
     * fingerprint checkpoints under them. A pair frame built before the
     * call can no longer be read after it.
     */
-  def invalidate(): Unit = {
-    phashPairsCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_phash_pairs", dir))
-    }
-    audioPairsCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_audio_pairs", dir))
-    }
-    Iterator.continually(fingerprintCheckpoints.poll()).takeWhile(_ != null).foreach(_.unpersist())
-  }
+  def invalidate(): Unit = graft.util.Artifacts.reset(this)
 
   /** The pair gate's entry point: the shared artifact, so the pair
     * table is built once per (session, dir) however many policies
@@ -1034,7 +1020,7 @@ object Multimodal {
       .distinct()
   }
 
-  private val audioPairsCache = new graft.util.SessionCache[String, DataFrame]
+  private val audioPairsCache = graft.util.Artifacts.memo(this, "graft_audio_pairs")
 
   /** Memoized [[audioNearDupPairs]] — the [[phashPairsShared]]
     * contract for the audio tier: one persisted verified pair table
@@ -1042,13 +1028,7 @@ object Multimodal {
     * [[invalidate]] drops it between timed runs.
     */
   private def audioPairsShared(spark: SparkSession, dir: String): DataFrame =
-    audioPairsCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_audio_pairs", dir),
-        audioNearDupPairs(spark, dir),
-      )
-    }
+    audioPairsCache(spark, dir)(audioNearDupPairs(spark, dir))
 
   def audioNearDupPairsGate(spark: SparkSession, dir: String): DataFrame =
     audioPairsShared(spark, dir)

@@ -74,8 +74,8 @@ object PqIndex {
   // LUT build, so without its own artifact one recall-gate call
   // (adc + rerank paths) would re-run the codebook's corpus
   // aggregate several times over.
-  private val codesCache = new graft.util.SessionCache[String, DataFrame]
-  private val codebookCache = new graft.util.SessionCache[String, DataFrame]
+  private val codesCache = graft.util.Artifacts.memo(this, "graft_pq_codes")
+  private val codebookCache = graft.util.Artifacts.memo(this, "graft_pq_codebook")
 
   /** ⌊10⁶·x⌋ per component: exact integers, portable to any engine. */
   private def quantize(e: Column): Column =
@@ -108,13 +108,7 @@ object PqIndex {
     * map-side combine, never the corpus.
     */
   def codebook(spark: SparkSession, dir: String): DataFrame =
-    codebookCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_pq_codebook", dir),
-        codebookPlan(spark, dir),
-      )
-    }
+    codebookCache(spark, dir)(codebookPlan(spark, dir))
 
   private def codebookPlan(spark: SparkSession, dir: String): DataFrame =
     codebookOf(Tables.parallel(spark, dir, "embeddings"))
@@ -165,13 +159,7 @@ object PqIndex {
     * row expansion.
     */
   def codes(spark: SparkSession, dir: String): DataFrame =
-    codesCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_pq_codes", dir),
-        encodeAgainst(Tables.parallel(spark, dir, "embeddings"), centroidsRow(spark, dir)),
-      )
-    }
+    codesCache(spark, dir)(encodeAgainst(Tables.parallel(spark, dir, "embeddings"), centroidsRow(spark, dir)))
 
   /** The whole codebook collapsed to ONE row — the broadcast-destined
     * artifact every row-wise encoder consumes.
@@ -207,36 +195,11 @@ object PqIndex {
         }) :+ quantNorm(col("q")).as("nrm"): _*
       )
 
-  /** Drop the memoized codes + codebook artifacts and their storage
-    * blocks (benchmark hygiene; by-name, value-liveness-independent).
+  /** Drop the memoized index artifacts and their storage blocks, and
+    * the memoized refresh-tier driver scalars: a timed run must pay
+    * its own bounded actions like it pays its own artifact builds.
     */
-  def invalidate(): Unit = {
-    codesCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_pq_codes", dir))
-    }
-    codebookCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_pq_codebook", dir))
-    }
-    v1CodebookCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_pq_codebook_v1", dir))
-    }
-    v1CodesCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_pq_codes_v1", dir))
-    }
-    lutsCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_pq_luts", dir))
-    }
-    shortlistCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_pq_short", dir))
-    }
-    ivfPqCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_ivfpq_top", dir))
-    }
-    // the memoized refresh-tier driver scalars: a timed run must pay
-    // its own bounded actions like it pays its own artifact builds
-    cutoffCache.invalidate()
-    firesCache.invalidate()
-  }
+  def invalidate(): Unit = graft.util.Artifacts.reset(this)
 
   /** Oracle surface of [[codes]]. */
   def codesTable(spark: SparkSession, dir: String): DataFrame = codes(spark, dir)
@@ -256,16 +219,10 @@ object PqIndex {
       // IDENTICAL |queries|·numSub-row table; without the artifact
       // each gate re-ran the scan + double aggregation that builds it
       // (round-14 measurement: ~0.3 s per consumer at sf0.1)
-      lutsCache.getOrElseUpdate(spark, dir) {
-        graft.util.NamedArtifact.cache(
-          spark,
-          graft.util.NamedArtifact.viewName("graft_pq_luts", dir),
-          queryLutsAgainst(spark, dir, nQueries, codebook(spark, dir)),
-        )
-      }
+      lutsCache(spark, dir)(queryLutsAgainst(spark, dir, nQueries, codebook(spark, dir)))
     else queryLutsAgainst(spark, dir, nQueries, codebook(spark, dir))
 
-  private val lutsCache = new graft.util.SessionCache[String, DataFrame]
+  private val lutsCache = graft.util.Artifacts.memo(this, "graft_pq_luts")
 
   /** The memoized ADC shortlist (top-50 by ADC score for the served
     * query set): the codes-table scoring pass whose ≤-k prefixes ARE
@@ -277,7 +234,7 @@ object PqIndex {
     * re-scoring (the bruteForceTopK convention).
     */
   private val ShortlistDepth = 50
-  private val shortlistCache = new graft.util.SessionCache[String, DataFrame]
+  private val shortlistCache = graft.util.Artifacts.memo(this, "graft_pq_short")
   private def adcShortlist(spark: SparkSession, dir: String, nQueries: Int): DataFrame = {
     // Memoize ONLY the served shape (r14 advice): the cache key and
     // view name do not encode nQueries, so a non-served caller would
@@ -286,14 +243,7 @@ object PqIndex {
     // convention adcTopK/adcRerankTopK and queryLuts already follow.
     def build: DataFrame =
       Similarity.topKPerQuery(adcScored(spark, dir, nQueries), ShortlistDepth, scoreCol = "score")
-    if (nQueries == ServedQueryCutoff)
-      shortlistCache.getOrElseUpdate(spark, dir) {
-        graft.util.NamedArtifact.cache(
-          spark,
-          graft.util.NamedArtifact.viewName("graft_pq_short", dir),
-          build,
-        )
-      }
+    if (nQueries == ServedQueryCutoff) shortlistCache(spark, dir)(build)
     else build
   }
 
@@ -406,19 +356,12 @@ object PqIndex {
     // scan per call (round-14 measurement: ~0.9 s each at sf0.1).
     // Dropped in [[invalidate]]; other shapes compute directly.
     if (nQueries == ServedQueryCutoff && nProbe == 3 && k <= IvfPqDepth)
-      ivfPqCache
-        .getOrElseUpdate(spark, dir) {
-          graft.util.NamedArtifact.cache(
-            spark,
-            graft.util.NamedArtifact.viewName("graft_ivfpq_top", dir),
-            ivfPqPlan(spark, dir, nQueries, IvfPqDepth, nProbe),
-          )
-        }
+      ivfPqCache(spark, dir)(ivfPqPlan(spark, dir, nQueries, IvfPqDepth, nProbe))
         .filter(col("rank") <= k)
     else ivfPqPlan(spark, dir, nQueries, k, nProbe)
 
   private val IvfPqDepth = 10
-  private val ivfPqCache = new graft.util.SessionCache[String, DataFrame]
+  private val ivfPqCache = graft.util.Artifacts.memo(this, "graft_ivfpq_top")
 
   private def ivfPqPlan(
       spark: SparkSession,
@@ -633,7 +576,7 @@ object PqIndex {
   // three times and the drift aggregation twice (r10 review). Two
   // separate caches — the fires computation itself consumes the
   // cutoff, so one shared entry would recurse into its own builder.
-  private val cutoffCache = new graft.util.SessionCache[String, java.lang.Long]
+  private val cutoffCache = graft.util.Artifacts.sessionMemo[String, java.lang.Long](this)
   def refreshCutoff(spark: SparkSession, dir: String): Long =
     cutoffCache
       .getOrElseUpdate(spark, dir) {
@@ -662,15 +605,11 @@ object PqIndex {
     * the full-corpus [[codebook]] (it is the second corpus-scan
     * aggregate every refresh-tier consumer shares).
     */
-  private val v1CodebookCache = new graft.util.SessionCache[String, DataFrame]
+  private val v1CodebookCache = graft.util.Artifacts.memo(this, "graft_pq_codebook_v1")
   private[graft] def storedCodebook(spark: SparkSession, dir: String): DataFrame =
-    v1CodebookCache.getOrElseUpdate(spark, dir) {
+    v1CodebookCache(spark, dir) {
       val c = refreshCutoff(spark, dir)
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_pq_codebook_v1", dir),
-        codebookOf(Tables.parallel(spark, dir, "embeddings").filter(col("vec_id") <= c)),
-      )
+      codebookOf(Tables.parallel(spark, dir, "embeddings").filter(col("vec_id") <= c))
     }
 
   /** The whole corpus encoded against v1 — the state of the index
@@ -679,16 +618,12 @@ object PqIndex {
     * named artifact; the drift monitor, the fold's no-refresh branch,
     * and the stale serving tier all read it.
     */
-  private val v1CodesCache = new graft.util.SessionCache[String, DataFrame]
+  private val v1CodesCache = graft.util.Artifacts.memo(this, "graft_pq_codes_v1")
   private[graft] def v1Codes(spark: SparkSession, dir: String): DataFrame =
-    v1CodesCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_pq_codes_v1", dir),
-        encodeAgainst(
-          Tables.parallel(spark, dir, "embeddings"),
-          centroidsRowOf(storedCodebook(spark, dir)),
-        ),
+    v1CodesCache(spark, dir) {
+      encodeAgainst(
+        Tables.parallel(spark, dir, "embeddings"),
+        centroidsRowOf(storedCodebook(spark, dir)),
       )
     }
 
@@ -740,7 +675,7 @@ object PqIndex {
   /** The trigger decision as one bounded driver action (the drift
     * frame is ≤ numSub·cells rows), memoized per (session, dir).
     */
-  private val firesCache = new graft.util.SessionCache[String, java.lang.Boolean]
+  private val firesCache = graft.util.Artifacts.sessionMemo[String, java.lang.Boolean](this)
   private[graft] def refreshFires(spark: SparkSession, dir: String): Boolean =
     firesCache
       .getOrElseUpdate(spark, dir) {

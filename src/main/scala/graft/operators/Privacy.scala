@@ -105,41 +105,6 @@ object Privacy {
         (col("n_sensitive") >= L).cast("int").as("meets_l"),
       )
 
-  /** The approx-distinct escape audit for the k-census: at 100 TB the
-    * exact `count(DISTINCT user_id)` partial-set exchange is the one
-    * corpus-linear shuffle in this tier, and `approx_count_distinct`
-    * (HLL++, map-side-mergeable sketches — constant bytes per class
-    * instead of the distinct set) is the standard escape. This audit
-    * quantifies what that trade costs ON THE k-FLAG, per class: both
-    * counts in one aggregation, summarized as one row (classes, flag
-    * flips in each direction, max permille count error). Engine-side
-    * only — HLL++ has no cross-engine oracle — measured at the sf10e
-    * rehearsal point (tools/ApproxKAudit, BENCH_SCALING.md).
-    */
-  def kAnonymityApproxDelta(spark: SparkSession, dir: String, rsd: Double = 0.05): DataFrame =
-    events(spark, dir)
-      .groupBy("event_type", "hr")
-      .agg(
-        countDistinct(col("user_id")).as("n_exact"),
-        approx_count_distinct(col("user_id"), rsd).as("n_approx"),
-      )
-      .select(
-        col("n_exact"),
-        col("n_approx"),
-        (col("n_exact") >= K).cast("int").as("k_exact"),
-        (col("n_approx") >= K).cast("int").as("k_approx"),
-      )
-      .agg(
-        count(lit(1)).as("n_classes"),
-        sum(when(col("k_exact") === 1 && col("k_approx") === 0, 1L).otherwise(0L))
-          .as("flips_pass_to_fail"),
-        sum(when(col("k_exact") === 0 && col("k_approx") === 1, 1L).otherwise(0L))
-          .as("flips_fail_to_pass"),
-        max(
-          expr("(1000 * abs(n_approx - n_exact)) div greatest(n_exact, 1)")
-        ).as("max_err_permille"),
-      )
-
   /** The closeness threshold, 1e6-scaled: a class passes when its
     * sensitive-value distribution sits within t = 0.35 of the corpus
     * distribution (categorical EMD = half the L1 distance).

@@ -55,11 +55,6 @@ object RelationalQueries {
     /** Exact decimal sum → bit-stable double. */
     def moneySum(c: Column): Column = round(sum(c), 2).cast("double")
 
-    /** avg as exact-sum / count: identical doubles divided by
-      * identical longs → identical IEEE result, no rounding step.
-      */
-    def moneyAvg(c: Column): Column = moneySum(c) / count(lit(1))
-
     // ---- scaled-long money -------------------------------------------
     // The decimal cast is the verified cross-engine HALF_UP quantizer
     // (see scaladoc above); per-ROW arithmetic after it is exact
@@ -2079,15 +2074,12 @@ object RelationalQueries {
   // a stored derived table, built by one lineitem shuffle on the
   // composite key and read by each query.
 
-  private val partsuppCache = new graft.util.SessionCache[String, DataFrame]
+  private val partsuppCache = graft.util.Artifacts.memo(this, "graft_partsupp")
 
   /** Drop the memoized derived-partsupp artifact (benchmark hygiene —
     * same eager-unpersist rationale as [[Dedup.invalidate]]).
     */
-  def invalidate(): Unit =
-    partsuppCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_partsupp", dir))
-    }
+  def invalidate(): Unit = graft.util.Artifacts.reset(this)
 
   /** The shared derived partsupp relation (see block comment above).
     * One lineitem scan + one shuffle on (l_partkey, l_suppkey); the
@@ -2096,17 +2088,13 @@ object RelationalQueries {
     * units per single part-supplier pair is unreachable).
     */
   def derivedPartsupp(spark: SparkSession, dir: String): DataFrame =
-    partsuppCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_partsupp", dir),
-        t(spark, dir, "lineitem")
-          .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
-          .agg(
-            sum(cents(col("l_quantity"))).as("ps_availqty_c"),
-            min(cents(col("l_extendedprice"))).as("ps_supplycost_c"),
-          ),
-      )
+    partsuppCache(spark, dir) {
+      t(spark, dir, "lineitem")
+        .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
+        .agg(
+          sum(cents(col("l_quantity"))).as("ps_availqty_c"),
+          min(cents(col("l_extendedprice"))).as("ps_supplycost_c"),
+        )
     }
 
   /** TPC-H Q2 analogue (min-cost supplier): for each LARGE small-size

@@ -443,7 +443,7 @@ object Sampling {
     // carried into the replica
     def corpus: DataFrame = {
       val base = spark
-        .table(graft.util.NamedArtifact.viewName("graft_ivf_round1", dir))
+        .table(IvfIndex.round1ViewName(dir))
         .select(col("vec_id"), col("embedding"), (col("cell").cast("long") * 256L + bkt).as("blk"))
       if (plantReplicas <= 0) base
       else {
@@ -841,22 +841,13 @@ object Sampling {
     // run. Built once per (session, dir, target), dropped in
     // [[invalidate]] (the tfIndexShared accounting convention).
     val key = s"$dir|$targetLang"
-    weightsCache.getOrElseUpdate(spark, key) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_dsir_weights", key),
-        importanceWeightsPlan(spark, dir, targetLang),
-      )
-    }
+    weightsCache(spark, key)(importanceWeightsPlan(spark, dir, targetLang))
   }
 
-  private val weightsCache = new graft.util.SessionCache[String, DataFrame]
+  private val weightsCache = graft.util.Artifacts.memo(this, "graft_dsir_weights")
 
   /** Drop the memoized DSIR weight artifact (benchmark hygiene). */
-  def invalidate(): Unit =
-    weightsCache.invalidateKeys { (spark, key) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_dsir_weights", key))
-    }
+  def invalidate(): Unit = graft.util.Artifacts.reset(this)
 
   private def importanceWeightsPlan(spark: SparkSession, dir: String, targetLang: String)
       : DataFrame = {

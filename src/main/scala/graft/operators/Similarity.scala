@@ -84,18 +84,11 @@ object Similarity {
     */
   def bruteForceTopK(spark: SparkSession, dir: String, nQueries: Int = 8, k: Int = 5): DataFrame =
     if (nQueries == PqIndex.ServedQueryCutoff && k <= NdcgK)
-      bfCache
-        .getOrElseUpdate(spark, dir) {
-          graft.util.NamedArtifact.cache(
-            spark,
-            graft.util.NamedArtifact.viewName("graft_bf_top", dir),
-            bruteForcePlan(spark, dir, nQueries, NdcgK),
-          )
-        }
+      bfCache(spark, dir)(bruteForcePlan(spark, dir, nQueries, NdcgK))
         .filter(col("rank") <= k)
     else bruteForcePlan(spark, dir, nQueries, k)
 
-  private val bfCache = new graft.util.SessionCache[String, DataFrame]
+  private val bfCache = graft.util.Artifacts.memo(this, "graft_bf_top")
 
   private def bruteForcePlan(spark: SparkSession, dir: String, nQueries: Int, k: Int): DataFrame = {
     val queries = embPlain(spark, dir)
@@ -112,10 +105,7 @@ object Similarity {
     * hygiene; by-name, value-liveness-independent — the PqIndex
     * invalidation pattern).
     */
-  def invalidate(): Unit =
-    bfCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(spark, graft.util.NamedArtifact.viewName("graft_bf_top", dir))
-    }
+  def invalidate(): Unit = graft.util.Artifacts.reset(this)
 
   /** ANN via sign-random-projection LSH: 6 deterministic md5-derived
     * hyperplanes → 64 buckets; neighbors searched only within the
@@ -554,7 +544,7 @@ object Similarity {
       if (p == 0) lit(0L)
       else graft.functions.VectorFunctions.lshBucket(col("embedding"), p).cast("long")
     def asgRef = spark
-      .table(graft.util.NamedArtifact.viewName("graft_ivf_round1", dir))
+      .table(IvfIndex.round1ViewName(dir))
       .select(col("vec_id"), col("embedding"), (col("cell").cast("long") * 256L + bkt).as("blk"))
     val a = asgRef
       .join(Tables.parallel(spark, dir, "embeddings").select(col("vec_id"), col("label")), "vec_id")
@@ -627,7 +617,7 @@ object Similarity {
     def bkt: Column =
       graft.functions.VectorFunctions.lshBucket(col("embedding"), p).cast("long")
     def asgRef = spark
-      .table(graft.util.NamedArtifact.viewName("graft_ivf_round1", dir))
+      .table(IvfIndex.round1ViewName(dir))
       .select(col("vec_id"), col("embedding"), (col("cell").cast("long") * 256L + bkt).as("blk"))
     // Replicas share their original's embedding, so cosine depends
     // only on the BASE pair: score base pairs once through the

@@ -33,10 +33,6 @@ object TextAnalysis {
   def alphaTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[a-z]+"), lit(0)))
 
-  /** Count of tokens found in `words`. */
-  def tokenCountIn(text: Column, words: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isin(words.map(lit(_)): _*)))
-
   /** English-ish stopwords present in the synthetic corpus. */
   val stopwordsEn: Seq[String] = Seq("the", "a", "of", "and", "to")
   /** Marker sets for the language-ID heuristic. */
@@ -116,7 +112,7 @@ object TextAnalysis {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "documents")
 
-  private val tfIndexCache = new graft.util.SessionCache[String, DataFrame]
+  private val tfIndexCache = graft.util.Artifacts.memo(this, "graft_tf_index")
 
   /** Memoized (doc_id, token, tf) term-frequency index — the
     * retrieval tier's postings table, built ONCE per (session, dir)
@@ -137,19 +133,15 @@ object TextAnalysis {
     * determinism of the counts.
     */
   private[graft] def tfIndexShared(spark: SparkSession, dir: String): DataFrame =
-    tfIndexCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_tf_index", dir),
-        docs(spark, dir)
-          .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-          .filter(col("token") =!= "")
-          .groupBy("doc_id", "token")
-          .agg(count(lit(1)).as("tf")),
-      )
+    tfIndexCache(spark, dir) {
+      docs(spark, dir)
+        .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
+        .filter(col("token") =!= "")
+        .groupBy("doc_id", "token")
+        .agg(count(lit(1)).as("tf"))
     }
 
-  private val dlIndexCache = new graft.util.SessionCache[String, DataFrame]
+  private val dlIndexCache = graft.util.Artifacts.memo(this, "graft_dl_index")
 
   /** Memoized per-document length table (doc_id, dl = Σtf) — the
     * retrieval index's companion statistic, stored next to the
@@ -161,48 +153,15 @@ object TextAnalysis {
     * cost ~0.8 s per pass at sf0.1, and RM3 paid it twice).
     */
   private[graft] def dlIndexShared(spark: SparkSession, dir: String): DataFrame =
-    dlIndexCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_dl_index", dir),
-        tfIndexShared(spark, dir).groupBy("doc_id").agg(sum(col("tf")).as("dl")),
-      )
-    }
+    dlIndexCache(spark, dir)(tfIndexShared(spark, dir).groupBy("doc_id").agg(sum(col("tf")).as("dl")))
 
-  /** Drop the memoized tf/dl indexes (benchmark hygiene — the
-    * key-based cleanup contract of `Dedup.invalidate`: reaches the
-    * cached storage blocks through the catalog name even when the
-    * soft memo reference was GC-cleared first).
+  /** Drop the memoized text artifacts (benchmark hygiene: the tf/dl
+    * indexes, the bm25 ranking, the vocabulary, the LM tables and the
+    * merge list).
     */
-  def invalidate(): Unit = {
-    tfIndexCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_tf_index", dir))
-    }
-    dlIndexCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_dl_index", dir))
-    }
-    bm25RankCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_bm25_top", dir))
-    }
-    vocabFreqCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_vocab_freq", dir))
-    }
-    lmBigramCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_lm_bigram", dir))
-    }
-    lmFlatCache.invalidateKeys { (spark, dir) =>
-      graft.util.NamedArtifact.drop(
-        spark, graft.util.NamedArtifact.viewName("graft_lm_flat", dir))
-    }
-    mergesCache.invalidate()
-  }
+  def invalidate(): Unit = graft.util.Artifacts.reset(this)
 
-  private val lmBigramCache = new graft.util.SessionCache[String, DataFrame]
+  private val lmBigramCache = graft.util.Artifacts.memo(this, "graft_lm_bigram")
 
   /** Memoized per-language bigram LM count table
     * (lang, l, r, cnt_lr, cnt_l) — the TRAINED bigram language model
@@ -226,22 +185,17 @@ object TextAnalysis {
     * convention: the first consumer of a timed run pays the build).
     */
   private[graft] def lmBigramShared(spark: SparkSession, dir: String): DataFrame =
-    lmBigramCache.getOrElseUpdate(spark, dir) {
+    lmBigramCache(spark, dir) {
       import org.apache.spark.sql.expressions.Window
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_lm_bigram", dir), {
-          docs(spark, dir)
-            .filter(size(split(col("text"), " ")) >= 2)
-            .select(col("lang"), explode(positionalBigrams(col("text"))).as("g"))
-            .groupBy(col("lang"), col("g.l").as("l"), col("g.r").as("r"))
-            .agg(count(lit(1)).as("cnt_lr"))
-            .withColumn("cnt_l", sum(col("cnt_lr")).over(Window.partitionBy("lang", "l")))
-        },
-      )
+      docs(spark, dir)
+        .filter(size(split(col("text"), " ")) >= 2)
+        .select(col("lang"), explode(positionalBigrams(col("text"))).as("g"))
+        .groupBy(col("lang"), col("g.l").as("l"), col("g.r").as("r"))
+        .agg(count(lit(1)).as("cnt_lr"))
+        .withColumn("cnt_l", sum(col("cnt_lr")).over(Window.partitionBy("lang", "l")))
     }
 
-  private val lmFlatCache = new graft.util.SessionCache[String, DataFrame]
+  private val lmFlatCache = graft.util.Artifacts.memo(this, "graft_lm_flat")
 
   /** Memoized LANG-FREE bigram count table (l, r, cnt_lr, cnt_l) —
     * the LM artifact's third tier (round 15). [[bigramLm]],
@@ -265,17 +219,12 @@ object TextAnalysis {
     * [[invalidate]] (first consumer of a timed run pays the build).
     */
   private[graft] def lmBigramFlatShared(spark: SparkSession, dir: String): DataFrame =
-    lmFlatCache.getOrElseUpdate(spark, dir) {
+    lmFlatCache(spark, dir) {
       import org.apache.spark.sql.expressions.Window
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_lm_flat", dir), {
-          lmBigramShared(spark, dir)
-            .groupBy("l", "r")
-            .agg(sum(col("cnt_lr")).as("cnt_lr"))
-            .withColumn("cnt_l", sum(col("cnt_lr")).over(Window.partitionBy("l")))
-        },
-      )
+      lmBigramShared(spark, dir)
+        .groupBy("l", "r")
+        .agg(sum(col("cnt_lr")).as("cnt_lr"))
+        .withColumn("cnt_l", sum(col("cnt_lr")).over(Window.partitionBy("l")))
     }
 
   /** Per-language token statistics. */
@@ -752,22 +701,17 @@ object TextAnalysis {
     * [[invalidate]] (the tfIndexShared accounting convention).
     */
   private[graft] def vocabFreqShared(spark: SparkSession, dir: String): DataFrame =
-    vocabFreqCache.getOrElseUpdate(spark, dir) {
-      graft.util.NamedArtifact.cache(
-        spark,
-        graft.util.NamedArtifact.viewName("graft_vocab_freq", dir),
-        docs(spark, dir)
-          .select(explode(tokens(col("text"))).as("token"))
-          .filter(col("token") =!= "")
-          .groupBy("token")
-          .agg(count(lit(1)).as("n")),
-      )
+    vocabFreqCache(spark, dir) {
+      docs(spark, dir)
+        .select(explode(tokens(col("text"))).as("token"))
+        .filter(col("token") =!= "")
+        .groupBy("token")
+        .agg(count(lit(1)).as("n"))
     }
 
-  private val vocabFreqCache = new graft.util.SessionCache[String, DataFrame]
+  private val vocabFreqCache = graft.util.Artifacts.memo(this, "graft_vocab_freq")
 
-  private val mergesCache =
-    new graft.util.SessionCache[String, Seq[(Int, String, String, Long, Long)]]
+  private val mergesCache = graft.util.Artifacts.sessionMemo[String, Seq[(Int, String, String, Long, Long)]](this)
 
   /** Positional word bigrams as an array of (l, r) structs — the one
     * definition of the index arithmetic (0-based sequence over
@@ -1757,19 +1701,12 @@ object TextAnalysis {
     // measurement: ~0.5 s per pass at sf0.1; the bruteForceTopK
     // artifact convention applied to the text tower)
     if (k <= Bm25RankDepth)
-      bm25RankCache
-        .getOrElseUpdate(spark, dir) {
-          graft.util.NamedArtifact.cache(
-            spark,
-            graft.util.NamedArtifact.viewName("graft_bm25_top", dir),
-            bm25ScoreAgainst(spark, dir, bm25QueryDf(spark), Bm25RankDepth, hintBroadcast = true),
-          )
-        }
+      bm25RankCache(spark, dir)(bm25ScoreAgainst(spark, dir, bm25QueryDf(spark), Bm25RankDepth, hintBroadcast = true))
         .filter(col("rk") <= k)
     else bm25ScoreAgainst(spark, dir, bm25QueryDf(spark), k, hintBroadcast = true)
 
   private val Bm25RankDepth = 10
-  private val bm25RankCache = new graft.util.SessionCache[String, DataFrame]
+  private val bm25RankCache = graft.util.Artifacts.memo(this, "graft_bm25_top")
 
   /** The literal bm25 query table (query_id, token, wgt = 1). */
   private def bm25QueryDf(spark: SparkSession): DataFrame = {

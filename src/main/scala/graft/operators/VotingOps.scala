@@ -44,25 +44,6 @@ object VotingOps {
   def turnoutByLocation(records: DataFrame): DataFrame =
     records.groupBy(col("address.state").as("state")).count()
 
-  /** Windowed variant of votes-per-candidate: tumbling event-time
-    * windows. The reference's watermark (spark-streaming.py:72) is
-    * inert because its aggregations are unwindowed; this is the
-    * principled version where the watermark actually bounds state.
-    */
-  def votesPerCandidateWindowed(
-      records: DataFrame,
-      timeCol: String = "voting_time",
-      windowDuration: String = "1 hour",
-  ): DataFrame =
-    records
-      .groupBy(window(col(timeCol), windowDuration), col("candidate_id"))
-      .agg(sum("vote").as("total_votes"))
-      .select(
-        col("window.start").as("window_start"),
-        col("candidate_id"),
-        col("total_votes"),
-      )
-
   /** Exact-once semantics on the vote stream: the reference enforces
     * one vote per voter via a UNIQUE(voter_id) constraint + rollback
     * (main.py:59, voting.py:120-122). Engine-side this is explicit

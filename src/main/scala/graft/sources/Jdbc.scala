@@ -25,23 +25,6 @@ object Jdbc {
   ): DataFrame =
     spark.read.jdbc(url, table, props)
 
-  /** Partitioned parallel scan — the form that matters at scale:
-    * `numPartitions` range predicates on `partitionColumn` split the
-    * table across executors instead of funneling through one
-    * connection.
-    */
-  def readPartitioned(
-      spark: SparkSession,
-      url: String,
-      table: String,
-      partitionColumn: String,
-      lowerBound: Long,
-      upperBound: Long,
-      numPartitions: Int,
-      props: Properties = new Properties,
-  ): DataFrame =
-    spark.read.jdbc(url, table, partitionColumn, lowerBound, upperBound, numPartitions, props)
-
   /** Batch insert (reference S7's postgres write path); SaveMode
     * .Overwrite is the reset/delete path (S8).
     */

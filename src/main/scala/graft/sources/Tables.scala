@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, StringType, TimestampNTZType, TimestampType}
 
-import graft.util.SessionCache
+import graft.util.Artifacts
 
 /** Loader for the driver-generated parquet corpus (TESTDATA.md).
   *
@@ -27,12 +27,12 @@ object Tables {
 
   // weak session keys + weak values: memoization must not pin a
   // session (or its plans) for the JVM lifetime — see SessionCache
-  private val cache = new SessionCache[(String, String, Boolean), DataFrame]
+  private val cache = Artifacts.sessionMemo[(String, String, Boolean), DataFrame](this)
 
   /** Drop every memoized relation (e.g. between benchmark runs, so a
     * timed run cannot ride on a previous run's listing work).
     */
-  def invalidate(): Unit = cache.invalidate()
+  def invalidate(): Unit = Artifacts.reset(this)
 
   /** Canonicalize an `events.ts` column to session-zoned
     * TimestampType (µs precision) regardless of which encoding the

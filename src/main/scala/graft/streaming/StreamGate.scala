@@ -58,13 +58,13 @@ object StreamGate {
   // entry just re-runs the bundle — same cost as invalidate(); the
   // sink directories outlive eviction (JVM-exit cleanup), so a
   // re-run never yanks files out from under a prior result
-  private val cache = new graft.util.SessionCache[(String, String), DataFrame]
+  private val cache = graft.util.Artifacts.sessionMemo[(String, String), DataFrame](this)
 
   def invalidate(): Unit = {
-    cache.invalidate()
+    graft.util.Artifacts.reset(this)
     // the shared staged-era input dirs of the eviction gates live in
     // StreamingQueries; a timed run must pay its own staging
-    StreamingQueries.stagedInputCache.invalidate()
+    graft.util.Artifacts.reset(StreamingQueries)
   }
 
   /** Streaming twin of RelationalQueries.votesPerCandidate. */

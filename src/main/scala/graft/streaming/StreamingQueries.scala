@@ -569,7 +569,7 @@ object StreamingQueries {
       .parquet(inDir)
   }
 
-  private[streaming] val stagedInputCache = new graft.util.SessionCache[String, String]
+  private val stagedInputCache = graft.util.Artifacts.sessionMemo[String, String](this)
 
   /** The watermarked hour-window aggregate over the id-interleaved
     * staged era stream — the shared front half of both tumbling
@@ -877,31 +877,6 @@ object StreamingQueries {
     else spark.read.schema(outSchema).parquet(batchDirs.toIndexedSeq: _*)
   }
 
-  /** Streaming twin of turnoutByLocation: the event stream enriched
-    * against the customer→nation dimension (stream-static equi-join,
-    * J1's shape) with a running count per nation — same oracle SQL as
-    * the batch twin.
-    *
-    * Only the bounded `nation` dim carries a static broadcast hint;
-    * `customer` scales with the corpus, so the stream⋈dim join is
-    * left to the planner's size estimate (broadcast while the dim
-    * fits, shuffled stream-static join when it doesn't — never a
-    * forced OOM). See RelationalQueries.turnoutByLocation.
-    */
-  def turnoutByLocationStream(spark: SparkSession, dir: String): DataFrame = {
-    val dim = graft.sources.Tables(spark, dir, "customer")
-      .join(
-        broadcast(graft.sources.Tables(spark, dir, "nation")),
-        col("c_nationkey") === col("n_nationkey"),
-      )
-      .select(col("c_custkey"), col("n_name"))
-    val agg = eventsStream(spark, dir)
-      .join(dim, col("user_id") === col("c_custkey"))
-      .groupBy("n_name")
-      .agg(count(lit(1)).as("turnout"))
-    runToFinal(spark, agg, Seq("n_name"))
-  }
-
   /** Streaming twin of RelationalQueries.latestEventPerUser: the CDC
     * latest-per-key view maintained INCREMENTALLY — a stateful
     * update-mode aggregation whose state is one (ts, event_id)-max
@@ -963,36 +938,6 @@ object StreamingQueries {
     graft.operators.RelationalQueries.itemsetPairExpansion(
       perUser.select(col("user_id"), sort_array(col("ts")).as("ts"))
     )
-  }
-
-  /** Streaming twin of RelationalQueries.votesPerCandidate — same
-    * oracle SQL.
-    */
-  def votesPerCandidateStream(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(spark, dir)
-      .groupBy("event_type")
-      .agg(moneyFromCents(sum(cents(col("value")))).as("total_votes"), count(lit(1)).as("n_events"))
-    runToFinal(spark, agg, Seq("event_type"))
-  }
-
-  /** Streaming twin of RelationalQueries.votesWindowed: tumbling
-    * 1-hour event-time windows with a watermark bounding state (the
-    * honest version of the reference's inert watermark). Update mode
-    * + latest-per-key, so the result equals the batch recompute
-    * regardless of micro-batch boundaries.
-    */
-  def votesWindowedStream(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(spark, dir)
-      .withWatermark("ts", "1 minute")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(moneyFromCents(sum(cents(col("value")))).as("total_value"), count(lit(1)).as("n"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
-        col("event_type"),
-        col("total_value"),
-        col("n"),
-      )
-    runToFinal(spark, agg, Seq("hour_start", "event_type"))
   }
 
   /** Streaming hourly-active-users gauge: the live concurrency/DAU

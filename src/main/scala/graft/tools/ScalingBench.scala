@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Scale-rehearsal bench: time a set of gates across corpora of
   * increasing scale factor (generated by [[ScaleCorpus]]) so
@@ -23,20 +23,6 @@ import graft.{GraftSession, SparkEntry}
   * defaults to the round-7 heavy-gate set below).
   */
 object ScalingBench {
-
-  private def materialize(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  private def resetCaches(): Unit = {
-    graft.sources.Tables.invalidate()
-    graft.streaming.StreamGate.invalidate()
-    graft.operators.Dedup.invalidate()
-    graft.operators.IvfIndex.invalidate()
-    graft.operators.PqIndex.invalidate()
-    graft.operators.RelationalQueries.invalidate()
-    graft.operators.TextAnalysis.invalidate()
-    graft.operators.Multimodal.invalidate()
-  }
 
   /** The heaviest gates of BENCH_r07 plus the full dedup/graph/ANN
     * families — the surface whose 100-TB behavior the plan-shape
@@ -77,6 +63,7 @@ object ScalingBench {
     val queries: Seq[String] = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(defaultQueries)
+    queries.foreach(q => require(SparkEntry.queries.contains(q), s"unknown gate $q in SPARK_GRAFT_SCALE_QUERIES"))
 
     val spark = GraftSession.getOrCreate()
     spark.listenerManager.register(ShuffleTap)
@@ -89,7 +76,7 @@ object ScalingBench {
       val v0 = ShuffleTap.version
       val t0 = System.nanoTime()
       try {
-        materialize(fn(spark, dir))
+        Bench.materialize(fn(spark, dir))
         val sec = (System.nanoTime() - t0) / 1e9
         val (b, _) = ShuffleTap.awaitNext(v0)
         if (b >= 0) shuffleBytes((name, dir)) = b
@@ -105,20 +92,21 @@ object ScalingBench {
     def put(q: String, sf: String, sec: Double, rows: Long, sb: Long): Unit =
       results.getOrElseUpdate(q, scala.collection.mutable.Map.empty)(sf) = (sec, rows, sb)
 
+    var warmupFailures = 0
     dirs.foreach { case (sf, dir) =>
       println(s"[scaling] === sf=$sf dir=$dir")
       // warmup pass: codegen/JIT/AQE stats out of the timed runs
       // (logged per gate — a pathological size point must be
       // attributable to a query, not a silent stall)
-      resetCaches()
+      graft.util.Artifacts.reset()
       (queries ++ bundles.map(_._2)).foreach { q =>
         val t0 = System.nanoTime()
-        try materialize(SparkEntry.queries(q)(spark, dir))
-        catch { case _: Throwable => () }
+        if (!Bench.warm("scaling", q)(Bench.materialize(SparkEntry.queries(q)(spark, dir))))
+          warmupFailures += 1
         println(f"[scaling] warmup $q ${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
       val passes = (1 to 3).map { _ =>
-        resetCaches()
+        graft.util.Artifacts.reset()
         val b = bundles.map { case (bname, member) =>
           bname -> timeOne(bname, SparkEntry.queries(member), dir)
         }
@@ -152,8 +140,10 @@ object ScalingBench {
       }.mkString("{", ",", "}")
       "\"" + q + "\":" + per
     }.mkString("{", ",", "}")
-    val line = s"""{"sfs":[${sfs.map("\"" + _ + "\"").mkString(",")}],"queries":$js}"""
+    val line =
+      s"""{"sfs":[${sfs.map("\"" + _ + "\"").mkString(",")}],"warmup_failures":$warmupFailures,"queries":$js}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath).toAbsolutePath, line + "\n")
+    println(s"[scaling] warm-up failures: $warmupFailures")
     println(s"[scaling] wrote $outPath")
     spark.stop()
   }

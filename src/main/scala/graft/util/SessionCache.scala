@@ -3,6 +3,7 @@ package graft.util
 import java.lang.ref.SoftReference
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
@@ -28,8 +29,11 @@ import org.apache.spark.sql.SparkSession
   * Memoization is still best-effort: an eviction costs a recompute,
   * never correctness (use sites cache cheap-to-rebuild artifacts — a
   * parquet file listing, a collected gate result).
+  *
+  * Only [[Artifacts]] creates one, so that every memo is registered
+  * for reset.
   */
-final class SessionCache[K, V <: AnyRef] {
+final class SessionCache[K, V <: AnyRef] private[util] () {
 
   private val bySession =
     new java.util.WeakHashMap[SparkSession, TrieMap[K, SoftReference[V]]]()
@@ -53,7 +57,14 @@ final class SessionCache[K, V <: AnyRef] {
     }
 
   /** Drop everything (benchmark hygiene between timed runs). */
-  def invalidate(): Unit = bySession.synchronized(bySession.clear())
+  private[util] def invalidate(): Unit = bySession.synchronized(bySession.clear())
+
+  /** No key is held for any live session (a GC-cleared value's key
+    * still counts as held: its external state may not be released).
+    */
+  def isEmpty: Boolean = bySession.synchronized {
+    bySession.values().asScala.forall(_.isEmpty)
+  }
 
   /** TEST HOOK: clear every soft value reference, exactly as the JVM
     * does under memory pressure. Eviction timing is otherwise not
@@ -61,7 +72,7 @@ final class SessionCache[K, V <: AnyRef] {
     * [[invalidateKeys]] exists for — it must stay pinned by a test,
     * not by luck.
     */
-  private[graft] def simulateValueEviction(): Unit = bySession.synchronized {
+  private[util] def simulateValueEviction(): Unit = bySession.synchronized {
     bySession.forEach((_, scoped) => scoped.values.foreach(_.clear()))
   }
 
@@ -78,7 +89,7 @@ final class SessionCache[K, V <: AnyRef] {
     * canonical form, so a rebuilt identical plan reaches the same
     * cached entry whether or not our soft reference is still live.
     */
-  def invalidateKeys(onKey: (SparkSession, K) => Unit): Unit = bySession.synchronized {
+  private[util] def invalidateKeys(onKey: (SparkSession, K) => Unit): Unit = bySession.synchronized {
     bySession.forEach { (session, scoped) => scoped.keys.foreach(k => onKey(session, k)) }
     bySession.clear()
   }

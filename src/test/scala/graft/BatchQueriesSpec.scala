@@ -31,6 +31,12 @@ class BatchQueriesSpec extends AnyFunSuite {
   val emptyAtSf0001: Set[String] = Set("q21_waiting_supplier")
 
   test("all queries run and return rows at sf0.001") {
+    // suites share the session: start from a clean slate, so that what
+    // is left at the end was left by these gates
+    graft.util.Artifacts.reset()
+    spark.catalog.clearCache()
+    System.gc()
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()
       if (emptyAtSf0001(name))
@@ -38,6 +44,22 @@ class BatchQueriesSpec extends AnyFunSuite {
       else
         assert(n > 0, s"$name returned 0 rows")
     }
+    // one reset releases every artifact the gates built: a memo left
+    // out of the registry keeps its cached blocks, view or entries past
+    // the reset, and a timed run would ride them. A persisted RDD that
+    // nothing references (a per-round local checkpoint of an iterative
+    // gate) is released by Spark's cleaner once collected, so collect
+    // first: what must not survive is what the reset leaves reachable.
+    graft.util.Artifacts.reset()
+    System.gc()
+    assert(spark.sharedState.cacheManager.isEmpty, "the reset left catalog-cached data")
+    val persisted = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !baseline(id) }
+    assert(persisted.isEmpty, s"the reset left persisted RDDs: ${persisted.values.mkString("; ")}")
+    val views = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name)
+    assert(views.isEmpty, s"the reset left artifact views: ${views.mkString(", ")}")
+    assert(graft.util.Artifacts.occupied.isEmpty,
+      s"the reset left memo entries: ${graft.util.Artifacts.occupied.mkString(", ")}")
   }
 
   test("entry flagship returns rows") {

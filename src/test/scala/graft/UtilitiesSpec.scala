@@ -14,13 +14,11 @@ class UtilitiesSpec extends AnyFunSuite {
     .builder(master = "local[4]", shufflePartitions = 4)
     .getOrCreate()
 
-  test("ExplainAll and TimeOne drive a gate end-to-end on a shared session") {
-    // smoke coverage for the two scratch driver utilities: they must
-    // resolve gates through the SparkEntry registry and run without
-    // touching the session lifecycle
+  test("ExplainAll drives a gate end-to-end on a shared session") {
+    // smoke coverage for the plan-dump utility: it must resolve gates
+    // through the SparkEntry registry and run without touching the
+    // session lifecycle
     ExplainAll.run(spark, sf, Seq("votes_per_candidate"))
-    val timings = TimeOne.run(spark, sf, Seq("votes_per_candidate"))
-    assert(timings.size == 2 && timings.forall(_._3 > 0))
   }
 
   test("native functions are callable from SQL via extensions descriptors") {
@@ -243,34 +241,33 @@ class UtilitiesSpec extends AnyFunSuite {
   }
 
   test("named-artifact invalidation frees storage even after soft-value eviction and rebuild") {
-    // the GC-cleared-entry path invalidateKeys exists for, made
-    // deterministic: evict the soft value, rebuild (which must NOT
-    // leave a second, unreachable cache entry), then key-based drop —
-    // every storage block this lineage pinned must be gone
-    val cache = new graft.util.SessionCache[String, org.apache.spark.sql.DataFrame]
-    val name = graft.util.NamedArtifact.viewName("graft_spec_artifact", sf)
+    // the GC-cleared-entry path the named memo's key-based reset
+    // exists for, made deterministic: evict the soft value, rebuild
+    // (which must NOT leave a second, unreachable cache entry), then
+    // reset — every storage block this lineage pinned must be gone
+    val memo = graft.util.Artifacts.memo(this, "graft_spec_artifact")
+    val name = memo.viewName(sf)
+    assert(name == graft.util.NamedArtifact.viewName("graft_spec_artifact", sf))
     // baseline: other suites share this session and may hold their own
     // cached plans — the contract is that THIS artifact's storage is
     // freed, i.e. no persistent RDD beyond the baseline survives
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
-    def build() = cache.getOrElseUpdate(spark, sf) {
-      graft.util.NamedArtifact.cache(
-        spark, name, Tables(spark, sf, "nation").groupBy("n_regionkey").count())
-    }
+    def build() = memo(spark, sf)(Tables(spark, sf, "nation").groupBy("n_regionkey").count())
     assert(build().count() > 0)
     assert(spark.catalog.isCached(name))
 
     // simulate memory-pressure eviction of the memoized value, then a
     // rebuild — the pre-fix behavior double-registered the cache entry
-    cache.simulateValueEviction()
-    assert(cache.get(spark, sf).isEmpty, "evicted value must read as absent")
+    memo.simulateValueEviction()
+    assert(memo.get(spark, sf).isEmpty, "evicted value must read as absent")
     assert(build().count() > 0)
     assert(spark.catalog.isCached(name))
 
-    // key-based invalidation must reach the blocks by NAME: the value
-    // reference was cleared, so a value-based hook could not
-    cache.simulateValueEviction()
-    cache.invalidateKeys((s, _) => graft.util.NamedArtifact.drop(s, name))
+    // the reset must reach the blocks by NAME: the value reference
+    // was cleared, so a value-based hook could not
+    memo.simulateValueEviction()
+    graft.util.Artifacts.reset(this)
+    assert(memo.isEmpty)
     assert(!spark.sessionState.catalog.getTempView(name).isDefined)
     // storage freed: no persistent RDD beyond the pre-test baseline
     // survives — the pre-fix double-registration left the first
