@@ -78,8 +78,6 @@ object SimHash64Expr {
 object SimHash16Expr {
   def apply(c: Column): Column = ColumnBridge.column(SimHash16Expr(ColumnBridge.expression(c)))
 
-  private val hexDigits = "0123456789abcdef"
-
   /** 64-bit vote-based simhash over the first 8 md5 digest bytes. */
   def compute64(text: UTF8String): Long = {
     val tokens = text.toString.split(" ", -1)
@@ -136,10 +134,4 @@ object SimHash16Expr {
     }
     fp
   }
-
-  // the hex-digit formulation (for documentation parity with the
-  // composed/oracle form): value of hex char i of md5 = nibble i of
-  // the digest; 4 chars -> 16 bits, big-endian by char position —
-  // which is exactly ((digest[0]&0xff)<<8)|(digest[1]&0xff) above.
-  private[functions] def hexValue(hexChar: Char): Int = hexDigits.indexOf(hexChar)
 }

@@ -17,18 +17,33 @@ import graft.sources.Tables
   */
 object Bucketing {
 
+  // the catalog is the memo, so a reset drops the tables written here:
+  // a timed run must pay its own clustered write, not ride the one its
+  // warm-up made
+  private val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  graft.util.Artifacts.onReset(this) {
+    synchronized {
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { spark =>
+        written.forEach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      }
+      written.clear()
+    }
+  }
+
   /** Write orders and customer as co-bucketed, bucket-sorted
     * warehouse tables for `dir` (idempotent per session: the catalog
     * is the memo — a second call reuses the existing tables, which is
-    * the entire point of bucketing). Bucket count is a fixed
-    * lever: at a real deployment it is sized so a bucket pair fits
-    * an executor core's working set.
+    * the entire point of bucketing; a reset drops them). Bucket count
+    * is a fixed lever: at a real deployment it is sized so a bucket
+    * pair fits an executor core's working set.
     */
   def bucketedTables(spark: SparkSession, dir: String, buckets: Int = 8): (String, String) =
     synchronized {
       val tag = graft.util.NamedArtifact.viewName("", dir).drop(1)
       val ordersT = s"graft_orders_bkt_$tag"
       val custT = s"graft_customer_bkt_$tag"
+      written.add(ordersT)
+      written.add(custT)
       // a previous JVM may have left the managed location behind while
       // this session's catalog starts empty — saveAsTable refuses such
       // an orphan location, so clear it before rebuilding
@@ -57,17 +72,6 @@ object Bucketing {
       (ordersT, custT)
     }
 
-  /** Oracle-gated co-bucketed join: orders⋈customer on the bucket
-    * key, reduced to per-segment order counts and exact money totals.
-    * The merge hint pins the sort-merge strategy declaratively (the
-    * result frame is lazy, so a conf bracket at build time would not
-    * survive until execution); with both sides bucket-partitioned on
-    * the key, the merge join plans with ZERO Exchange — asserted in
-    * BucketingSpec against this exact plan (per-bucket local sorts
-    * remain: Spark does not propagate bucket-file sort order, and a
-    * local sort is not a shuffle). Results are bucketing-invariant,
-    * so the DuckDB oracle is the plain join of the same parquet.
-    */
   /** Z-order (Morton) interleave of two bounded keys: bit i of x
     * lands at position 2i, bit i of y at 2i+1. Disjoint bit
     * positions, so summing the shifted bits IS the interleave — all
@@ -125,6 +129,17 @@ object Bucketing {
         (max(col("y")) - min(col("y")) + 1).as("y_span"),
       )
 
+  /** Oracle-gated co-bucketed join: orders⋈customer on the bucket
+    * key, reduced to per-segment order counts and exact money totals.
+    * The merge hint pins the sort-merge strategy declaratively (the
+    * result frame is lazy, so a conf bracket at build time would not
+    * survive until execution); with both sides bucket-partitioned on
+    * the key, the merge join plans with ZERO Exchange — asserted in
+    * BucketingSpec against this exact plan (per-bucket local sorts
+    * remain: Spark does not propagate bucket-file sort order, and a
+    * local sort is not a shuffle). Results are bucketing-invariant,
+    * so the DuckDB oracle is the plain join of the same parquet.
+    */
   def bucketedJoinSummary(spark: SparkSession, dir: String): DataFrame = {
     val (ordersT, custT) = bucketedTables(spark, dir)
     spark.table(ordersT)

@@ -605,8 +605,6 @@ object Dedup {
       // lineage; under the cap this IS the whole edge set
       val sample = casted.limit(smallGraphCap + 1).collect()
       if (sample.length <= smallGraphCap) {
-        if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-          println(s"[cc] small-graph dispatch: ${sample.length} edges -> driver union-find")
         val labels = driverUnionFind(sample.map(r => (r.getLong(0), r.getLong(1))))
         val spark = pairs.sparkSession
         import spark.implicits._
@@ -649,8 +647,6 @@ object Dedup {
       converged = shrunk == 0
       rounds += 1
     }
-    if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-      println(s"[cc] min-label ran $rounds rounds (converged=$converged)")
     if (converged)
       labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
     else {

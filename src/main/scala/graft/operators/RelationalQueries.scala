@@ -52,9 +52,6 @@ object RelationalQueries {
     /** Exact fixed-point view of a small ≤2-decimal factor (1±rate). */
     def frac(c: Column): Column = c.cast("decimal(4,2)")
 
-    /** Exact decimal sum → bit-stable double. */
-    def moneySum(c: Column): Column = round(sum(c), 2).cast("double")
-
     // ---- scaled-long money -------------------------------------------
     // The decimal cast is the verified cross-engine HALF_UP quantizer
     // (see scaladoc above); per-ROW arithmetic after it is exact

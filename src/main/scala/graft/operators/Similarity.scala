@@ -390,7 +390,7 @@ object Similarity {
     * pair leg ALONE — the dedup_embedding_cosine gate — measures
     * 0.85 s warm, against this gate's 0.86 s DuckDB twin TOTAL; the
     * increment to ~1.7 s is the CC fixpoint, 3 driver-synchronous
-    * rounds (SPARK_GRAFT_CC_LOG-measured; 1-hop init saved the 4th)
+    * rounds (measured; 1-hop init saved the 4th)
     * each paying a checkpoint + convergence-probe job floor on a
     * graph of a few hundred edges, plus the final corpus join job.
     * The floors are convergence-detection latency, not data volume —

@@ -24,45 +24,15 @@ import graft.sources.Tables
   */
 object StreamingQueries {
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`,
-    * restoring the previous value afterwards. The conf must stay set
-    * until any started streaming query has fully TERMINATED (the
-    * stream clones the session — and its confs — from its own
-    * execution thread, so restoring right after start() would race);
-    * callers therefore await termination inside `body`.
+  /** Scratch output dir for a sink gate, deleted at JVM exit (see
+    * [[StreamGate.scratchDir]]).
     */
-  /** Scratch output dir for a sink gate. Cleanup happens at JVM
-    * exit, NOT at the next invocation: a previously returned gate
-    * result is a LAZY reader over its sink directory, so deleting
-    * that directory when the same gate is invoked again would break
-    * any holder that re-evaluates the earlier frame (the
-    * "materialized before next invocation" contract was only a
-    * comment, and harness changes shouldn't be able to violate it
-    * into FileNotFoundException). The outputs are micro-batch-sized
-    * gate results; a bench run accumulates a handful of small dirs,
-    * all reclaimed by the exit hook.
-    */
-  def scratchSinkDir(gate: String): String = {
-    // same storage preference as StreamGate.scratchDir: scratch sink
-    // output and staged era inputs ride tmpfs when available — the
-    // checkpoint dirs already did, and round-14 profiling showed the
-    // sink gates spending driver-gap time in disk-backed /tmp writes
-    // the checkpoints had already stopped paying
-    val d = graft.streaming.StreamGate.scratchDir(s"graft-sink-$gate")
-    sinkDirsToCleanup.add(d)
-    d
-  }
-  private val sinkDirsToCleanup = {
-    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      dirs.forEach(p => rm(new java.io.File(p)))
-    }))
-    dirs
-  }
+  def scratchSinkDir(gate: String): String =
+    // same storage as the checkpoints: scratch sink output and staged
+    // era inputs ride tmpfs when available — round-14 profiling showed
+    // the sink gates spending driver-gap time in disk-backed /tmp
+    // writes the checkpoints had already stopped paying
+    StreamGate.scratchDir(s"graft-sink-$gate")
 
   /** Footer-only schema probe for a declared-schema streaming source:
     * declare what is ACTUALLY at rest, then let
@@ -116,14 +86,6 @@ object StreamingQueries {
       name)
   }
 
-  private def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-      body
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Event-stream file source. Schema must be declared for streaming
     * reads — but the `ts` field's type is taken from the actual
     * parquet footer (one batch-side schema inference, no data read),
@@ -158,23 +120,13 @@ object StreamingQueries {
     * monotonically_increasing_id formulation only encoded arrival
     * order through a partition-layout implementation detail.)
     *
-    * State-store note: a stateful query creates one state store per
-    * shuffle partition; the gate aggregations have at most a few
-    * thousand keys, so `statePartitions` keeps the per-query store
-    * setup/commit cost proportionate. On a real deployment this knob
-    * is sized to state volume, not defaulted to the session's
-    * shuffle parallelism.
+    * Runs under [[StreamGate.GateStreamConf]] (state-store sizing).
     */
-  def runToFinal(
-      spark: SparkSession,
-      agg: DataFrame,
-      keyCols: Seq[String],
-      statePartitions: Int = 8,
-  ): DataFrame = {
+  def runToFinal(spark: SparkSession, agg: DataFrame, keyCols: Seq[String]): DataFrame = {
     // the capture + max-batch-id collapse is ONE implementation
     // (VotePipeline.ChangelogCapture), shared with every
     // startCaptureQuery harness consumer — not a second copy here
-    withShufflePartitions(spark, statePartitions) {
+    StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
       val (q, capture) =
         VotePipeline.startCaptureQuery(agg, "graft_run_to_final", availableNow = true)
       q.awaitTermination()
@@ -197,32 +149,20 @@ object StreamingQueries {
       agg: DataFrame,
       keyCols: Seq[String],
       outDir: String,
-      statePartitions: Int = 8,
   ): DataFrame = {
     val outSchema = agg.schema
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    try {
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      withShufflePartitions(spark, statePartitions) {
-        val q = agg.writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$outDir/b$batchId"); ()
-          }
-          .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-rtf"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally {
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
+    StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
+      agg.writeStream
+        .outputMode("update")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
+          batch.write.mode("overwrite").parquet(s"$outDir/b$batchId"); ()
+        }
+        .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-rtf"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
     }
-    val dirs = Option(new java.io.File(outDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
+    val dirs = batchDirs(outDir)
     if (dirs.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
     else {
       val withBid = dirs.toSeq.map { d =>
@@ -236,6 +176,16 @@ object StreamingQueries {
         .select(keyCols.map(col) ++ valueCols.map(n => col("__last").getField(n).as(n)): _*)
     }
   }
+
+  /** The per-batch output directories (`b<batchId>`) under `dir`,
+    * selected by NAME, never by isDirectory alone: a crashed or
+    * retried batch write can leave a _temporary staging directory
+    * behind, and a bare directory glob would read (or fail on) its
+    * partial files.
+    */
+  private def batchDirs(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
 
   /** The stream side of the similarity gate: embedding corpus as a
     * stream, scored against the broadcast STATIC query set
@@ -307,6 +257,24 @@ object StreamingQueries {
     ).select(col("event_a"), col("event_b"), col("type_a"), col("type_b"))
   }
 
+  /** Start (without awaiting) an append-mode stream onto a parquet
+    * sink — the building block [[runAppendToParquet]], both StreamGate
+    * bundles and the stateful scaling rehearsal share. The caller owns
+    * the conf bracket ([[StreamGate.withConf]]) and must keep it until
+    * the query terminates.
+    */
+  private[graft] def startAppendToParquet(
+      stream: DataFrame,
+      outPath: String,
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .format("parquet")
+      .option("path", outPath)
+      .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-sink"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+
   /** PRODUCTION append path: run an append-mode stream to completion
     * writing micro-batches straight to a parquet sink — no row ever
     * visits the driver, the sink is a distributed table — and hand
@@ -319,52 +287,11 @@ object StreamingQueries {
     * The read-back declares the stream's schema so an empty stream
     * yields an empty relation rather than a schema-inference error.
     */
-  /** Start (without awaiting) an append-mode stream onto a parquet
-    * sink — the building block [[runAppendToParquet]] and the
-    * StreamGate sink bundle share. The caller owns the conf bracket
-    * (shuffle/state sizing, no-data micro-batches) and must keep it
-    * until the query terminates.
-    */
-  private[streaming] def startAppendToParquet(
-      stream: DataFrame,
-      outPath: String,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-sink"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  def runAppendToParquet(
-      spark: SparkSession,
-      stream: DataFrame,
-      outPath: String,
-      statePartitions: Int = 8,
-  ): DataFrame = {
-    // stateful streams create one state store per shuffle partition:
-    // size it like the other gate queries (see runToFinal) instead of
-    // inheriting the session's batch parallelism
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    try {
-      // append gates emit on data (inner joins on match, projections
-      // per row) — the trailing no-data micro-batch would be a pure
-      // state-commit round with no output (same reasoning as the
-      // StreamGate bundle). ORACLE CONTRACT: evictionAppendViaSink's
-      // DuckDB oracle models evictions at batches 1 and 2 ONLY (W0/W1)
-      // — a trailing no-data batch would evict with W2 and emit extra
-      // windows, so this `false` is load-bearing for that gate's
-      // hash-match; a refactor that drops it must update the oracle.
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      withShufflePartitions(spark, statePartitions) {
-        startAppendToParquet(stream, outPath).awaitTermination()
-      }
-    } finally {
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
+  def runAppendToParquet(spark: SparkSession, stream: DataFrame, outPath: String): DataFrame = {
+    // GateStreamConf's `noDataMicroBatches = false` is load-bearing
+    // for the append-mode eviction gates' oracles (see its scaladoc)
+    StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
+      startAppendToParquet(stream, outPath).awaitTermination()
     }
     spark.read.schema(stream.schema).parquet(outPath)
   }
@@ -387,25 +314,6 @@ object StreamingQueries {
   def intervalJoinViaSink(spark: SparkSession, dir: String, outPath: String): DataFrame =
     runAppendToParquet(spark, intervalJoinStream(spark, dir), outPath)
 
-  /** Streaming exact dedup through the production sink path: the
-    * event stream deduplicated on (user_id, event_type) with
-    * `dropDuplicatesWithinWatermark`, first occurrences appended
-    * straight to a distributed parquet sink — the ST6 semantics
-    * (late/duplicate data) running end-to-end through the 100 TB
-    * append shape rather than a driver capture.
-    *
-    * The output projects exactly the dedup key, so the surviving
-    * row's identity is immaterial and the result is the deterministic
-    * distinct key set (same rows as batch `SELECT DISTINCT`)
-    * regardless of micro-batch boundaries or partition arrival order.
-    *
-    * The watermark delay (90 days) exceeds the corpus's event-time
-    * span, so no dedup state is evicted mid-run and every duplicate
-    * is caught — the bounded-input analogue of "delay ≥ maximum
-    * duplicate lag". On an unbounded deployment the delay is sized to
-    * the real dedup horizon and state stays bounded by eviction,
-    * which is exactly what this operator exists to guarantee.
-    */
   /** The dedup lineage [[streamDedupViaSink]] and the StreamGate sink
     * bundle share.
     */
@@ -456,6 +364,25 @@ object StreamingQueries {
     )
   }
 
+  /** Streaming exact dedup through the production sink path: the
+    * event stream deduplicated on (user_id, event_type) with
+    * `dropDuplicatesWithinWatermark`, first occurrences appended
+    * straight to a distributed parquet sink — the ST6 semantics
+    * (late/duplicate data) running end-to-end through the 100 TB
+    * append shape rather than a driver capture.
+    *
+    * The output projects exactly the dedup key, so the surviving
+    * row's identity is immaterial and the result is the deterministic
+    * distinct key set (same rows as batch `SELECT DISTINCT`)
+    * regardless of micro-batch boundaries or partition arrival order.
+    *
+    * The watermark delay (90 days) exceeds the corpus's event-time
+    * span, so no dedup state is evicted mid-run and every duplicate
+    * is caught — the bounded-input analogue of "delay ≥ maximum
+    * duplicate lag". On an unbounded deployment the delay is sized to
+    * the real dedup horizon and state stays bounded by eviction,
+    * which is exactly what this operator exists to guarantee.
+    */
   def streamDedupViaSink(spark: SparkSession, dir: String, outPath: String): DataFrame =
     runAppendToParquet(spark, streamDedupLineage(spark, dir), outPath)
 
@@ -472,48 +399,6 @@ object StreamingQueries {
     tableStream(spark, dir, "documents", fallback)
   }
 
-  /** Watermark-driven state EVICTION, exercised for real (ST3+ST6 at
-    * the ORACLE level — the specs pin late-drop semantics, but until
-    * this gate no hash-matched query delivered out-of-order event
-    * times ACROSS micro-batches so that evicted windows and dropped
-    * late rows shape the final changelog):
-    *
-    *  1. the events corpus is STAGED as three era files
-    *     (era = event_id % 3, strictly increasing mtimes) and
-    *     re-read as a file stream with maxFilesPerTrigger = 1 —
-    *     batch k is exactly era k, so batch boundaries are
-    *     deterministic and each era re-delivers the FULL event-time
-    *     range: every era past the first carries rows far older than
-    *     the watermark left by its predecessor (provably-late input
-    *     by construction);
-    *  2. a 15-day watermark over a 1-hour tumbling window aggregate:
-    *     after era 0 the watermark stands at max(ts) − 15 d, so
-    *     roughly the older half of each later era's rows land in
-    *     already-EVICTED windows and are dropped, while the newer
-    *     half updates still-live windows — the changelog shows both
-    *     fates;
-    *  3. update-mode changelog to explicit-batch-id subdirectories
-    *     (the ChangelogCapture file contract: an at-least-once retry
-    *     overwrites its own delivery), collapsed to the final value
-    *     per window by max batch id.
-    *
-    * The DuckDB oracle replicates the WATERMARK RULE itself: per-era
-    * max event time (over ALL rows of the era — the stats node sees
-    * rows the aggregation later drops), ms-floored minus the delay,
-    * running-max monotone; a row is accepted iff its WINDOW END
-    * exceeds the late-event watermark standing when its era arrives.
-    * Spark ≥ 3.4 runs DUAL watermarks (SPARK-40925): micro-batch k
-    * filters late events with the PREVIOUS batch's watermark — stats
-    * through batch k − 2 — while eviction uses batch k − 1's, the
-    * two aligning so an accepted row can never target an
-    * already-evicted window. Measured here before being encoded in
-    * the oracle: batch 1 accepted all 3333 era-1 rows under the
-    * era-0 watermark; batch 2 dropped to 361 live windows by it. The
-    * hash-match therefore proves eviction + late-drop semantics, not
-    * just windowed arithmetic. Window ends are hour-aligned while
-    * the watermark inherits its era-max's sub-second micros, so the
-    * boundary comparison can never tie (the determinism rule).
-    */
   /** Stage `ev` as three mtime-ordered era files under `root/in` —
     * era of a row = `eraCol` (must be 0/1/2) — and return the
     * maxFilesPerTrigger = 1 file stream over them: batch k is exactly
@@ -595,48 +480,54 @@ object StreamingQueries {
     (agg, root)
   }
 
+  /** Watermark-driven state EVICTION, exercised for real (ST3+ST6 at
+    * the ORACLE level — the specs pin late-drop semantics, but until
+    * this gate no hash-matched query delivered out-of-order event
+    * times ACROSS micro-batches so that evicted windows and dropped
+    * late rows shape the final changelog):
+    *
+    *  1. the events corpus is STAGED as three era files
+    *     (era = event_id % 3, strictly increasing mtimes) and
+    *     re-read as a file stream with maxFilesPerTrigger = 1 —
+    *     batch k is exactly era k, so batch boundaries are
+    *     deterministic and each era re-delivers the FULL event-time
+    *     range: every era past the first carries rows far older than
+    *     the watermark left by its predecessor (provably-late input
+    *     by construction);
+    *  2. a 15-day watermark over a 1-hour tumbling window aggregate:
+    *     after era 0 the watermark stands at max(ts) − 15 d, so
+    *     roughly the older half of each later era's rows land in
+    *     already-EVICTED windows and are dropped, while the newer
+    *     half updates still-live windows — the changelog shows both
+    *     fates;
+    *  3. update-mode changelog to explicit-batch-id subdirectories
+    *     (the ChangelogCapture file contract: an at-least-once retry
+    *     overwrites its own delivery), collapsed to the final value
+    *     per window by max batch id.
+    *
+    * The DuckDB oracle replicates the WATERMARK RULE itself: per-era
+    * max event time (over ALL rows of the era — the stats node sees
+    * rows the aggregation later drops), ms-floored minus the delay,
+    * running-max monotone; a row is accepted iff its WINDOW END
+    * exceeds the late-event watermark standing when its era arrives.
+    * Spark ≥ 3.4 runs DUAL watermarks (SPARK-40925): micro-batch k
+    * filters late events with the PREVIOUS batch's watermark — stats
+    * through batch k − 2 — while eviction uses batch k − 1's, the
+    * two aligning so an accepted row can never target an
+    * already-evicted window. Measured here before being encoded in
+    * the oracle: batch 1 accepted all 3333 era-1 rows under the
+    * era-0 watermark; batch 2 dropped to 361 live windows by it. The
+    * hash-match therefore proves eviction + late-drop semantics, not
+    * just windowed arithmetic. Window ends are hour-aligned while
+    * the watermark inherits its era-max's sub-second micros, so the
+    * boundary comparison can never tie (the determinism rule).
+    */
   def lateEvictionViaSink(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val (agg, root) = lateEvictionStagedAgg(spark, dir)
     val outDir = s"$root/out"
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    try {
-      // a trailing no-data batch would only evict state (update mode
-      // emits nothing for evictions) — keep batch k == era k
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      withShufflePartitions(spark, 8) {
-        agg.writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-            batch.withColumn("__bid", lit(batchId))
-              .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-            ()
-          }
-          .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-latewin"))
-          .trigger(Trigger.AvailableNow())
-          .start().awaitTermination()
-      }
-    } finally {
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
-    val outSchema = new StructType()
-      .add("window_start_us", LongType).add("window_end_us", LongType)
-      .add("n_events", LongType).add("total_value", DoubleType)
-      .add("__bid", LongType)
-    val batchDirs = Option(new java.io.File(outDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
-      .map(_.getPath)
-    require(batchDirs.nonEmpty, "eviction gate landed no changelog batches")
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("window_start_us").orderBy(col("__bid").desc)
-    spark.read.schema(outSchema).parquet(batchDirs.toIndexedSeq: _*)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select("window_start_us", "window_end_us", "n_events", "total_value")
+    val latest = runToFinalViaSink(spark, agg, Seq("window_start_us"), outDir)
+    require(batchDirs(outDir).nonEmpty, "eviction gate landed no changelog batches")
+    latest
   }
 
   /** APPEND-MODE twin of [[lateEvictionViaSink]] — the other half of
@@ -819,9 +710,9 @@ object StreamingQueries {
     * sink.
     */
   def qualityRouteViaSink(spark: SparkSession, dir: String, outDir: String): DataFrame = {
-    // stateless routing: no state stores, but keep sink parallelism
-    // consistent with the other gate streams
-    withShufflePartitions(spark, 8) {
+    // stateless routing: no state stores and no no-data batches, but
+    // keep sink parallelism consistent with the other gate streams
+    StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
       startQualityRoute(spark, dir, outDir).awaitTermination()
     }
     readQualityRouteKeep(spark, outDir)
@@ -865,16 +756,9 @@ object StreamingQueries {
   private[streaming] def readQualityRouteKeep(spark: SparkSession, outDir: String): DataFrame = {
     val keepPath = s"$outDir/keep"
     val outSchema = new StructType().add("doc_id", LongType).add("source", StringType)
-    // batch dirs are selected by NAME (b<id>), never by isDirectory
-    // alone: a crashed or retried batch write can leave a _temporary
-    // staging directory behind, and a bare directory glob would read
-    // (or fail on) its partial files
-    val batchDirs = Option(new java.io.File(keepPath).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
-      .map(_.getPath)
-    if (batchDirs.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    else spark.read.schema(outSchema).parquet(batchDirs.toIndexedSeq: _*)
+    val dirs = batchDirs(keepPath).map(_.getPath)
+    if (dirs.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
+    else spark.read.schema(outSchema).parquet(dirs: _*)
   }
 
   /** Streaming twin of RelationalQueries.latestEventPerUser: the CDC
@@ -940,24 +824,6 @@ object StreamingQueries {
     )
   }
 
-  /** Streaming hourly-active-users gauge: the live concurrency/DAU
-    * counter a product dashboard runs. Streaming aggregations can't
-    * express COUNT(DISTINCT …), so the production pattern is the
-    * two-stage pipeline this gate runs end-to-end: stage 1 dedups
-    * (user, hour) FIRST-SIGHTINGS in-stream
-    * (`dropDuplicatesWithinWatermark` — one state row per active
-    * user-hour, evicted as the watermark passes) and appends them to
-    * the distributed sink; stage 2 is a stateless per-hour count of
-    * the landed first-sightings (on a real deployment, the downstream
-    * consumer — or an approx HLL gauge validated by this exact twin).
-    *
-    * The watermark delay exceeds the corpus event-time span (the
-    * bounded-input analogue of "delay ≥ max duplicate lag", same
-    * contract as [[streamDedupLineage]]), so the landed set is
-    * EXACTLY the distinct (user, hour) table and the gauge equals
-    * batch COUNT(DISTINCT user_id) per hour regardless of micro-batch
-    * boundaries.
-    */
   /** Streaming incremental near-dup probe — the INGEST-TIME dedup a
     * 100 TB pipeline runs: every arriving document is shingled,
     * MinHash-banded map-side, and probed against the STORED band-key
@@ -1532,6 +1398,24 @@ object StreamingQueries {
   def piiRedactViaSink(spark: SparkSession, dir: String): DataFrame =
     runAppendToParquet(spark, piiRedactStream(spark, dir), scratchSinkDir("piiscrub") + "/out")
 
+  /** Streaming hourly-active-users gauge: the live concurrency/DAU
+    * counter a product dashboard runs. Streaming aggregations can't
+    * express COUNT(DISTINCT …), so the production pattern is the
+    * two-stage pipeline this gate runs end-to-end: stage 1 dedups
+    * (user, hour) FIRST-SIGHTINGS in-stream
+    * (`dropDuplicatesWithinWatermark` — one state row per active
+    * user-hour, evicted as the watermark passes) and appends them to
+    * the distributed sink; stage 2 is a stateless per-hour count of
+    * the landed first-sightings (on a real deployment, the downstream
+    * consumer — or an approx HLL gauge validated by this exact twin).
+    *
+    * The watermark delay exceeds the corpus event-time span (the
+    * bounded-input analogue of "delay ≥ max duplicate lag", same
+    * contract as [[streamDedupLineage]]), so the landed set is
+    * EXACTLY the distinct (user, hour) table and the gauge equals
+    * batch COUNT(DISTINCT user_id) per hour regardless of micro-batch
+    * boundaries.
+    */
   def activeUsersStream(spark: SparkSession, dir: String): DataFrame = {
     val firsts = eventsStream(spark, dir)
       .select(col("ts"), col("user_id"), date_trunc("hour", col("ts")).as("hour_ts"))

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -64,8 +62,10 @@ object VotePipeline {
   val RocksDbProviderClass: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  val StateStoreProviderKey: String = "spark.sql.streaming.stateStore.providerClass"
+
   def useRocksDbStateStore(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProviderClass)
+    spark.conf.set(StateStoreProviderKey, RocksDbProviderClass)
 
   /** Both reference aggregations from one shared lineage. Each
     * query gets its own checkpoint + state store, as in the
@@ -92,19 +92,19 @@ object VotePipeline {
     * callbacks therefore receive `(partials, batchId)` and MUST
     * upsert keyed by batch id (replace that batch's partials, never
     * append), or a retried batch double-counts. StreamGate's fan-out
-    * sink (StreamGate.scala keyed-replacement buffers) is the model
+    * pass (one [[ChangelogCapture]] per partial) is the model
     * implementation; the retry spec in StreamingAdvancedSpec pins the
-    * semantics.
+    * semantics. The checkpoint is a throwaway scratch dir
+    * ([[StreamGate.scratchDir]]).
     */
   def startFanOut(
       parsed: DataFrame,
       writeVotes: (DataFrame, Long) => Unit,
       writeTurnout: (DataFrame, Long) => Unit,
   ): StreamingQuery = {
-    val checkpoint = Files.createTempDirectory("graft-ckpt-fanout").toString
     parsed.writeStream
       .outputMode("update")
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-fanout"))
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val b = batch.persist()
         try {

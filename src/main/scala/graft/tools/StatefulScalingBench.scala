@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.streaming.{Sessionize, StreamingQueries}
+import graft.streaming.{Sessionize, StreamGate, StreamingQueries, VotePipeline}
 
 /** Scale rehearsal for the STATEFUL streaming tier — the one 100 TB
   * axis the batch exponents in BENCH_SCALING.md do not cover:
@@ -56,7 +56,7 @@ object StatefulScalingBench {
 
     val providers: Seq[(String, String)] = Seq(
       "hdfs" -> "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-      "rocksdb" -> graft.streaming.VotePipeline.RocksDbProviderClass,
+      "rocksdb" -> VotePipeline.RocksDbProviderClass,
     )
 
     def gateStreams(dir: String): Seq[(String, () => DataFrame)] = {
@@ -77,23 +77,18 @@ object StatefulScalingBench {
       )
     }
 
-    def runOnce(stream: DataFrame): RunStats = {
+    def runOnce(stream: DataFrame, provider: String): RunStats = {
       val out = StreamingQueries.scratchSinkDir("stateful") + "/out"
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
       val t0 = System.nanoTime()
-      val q =
-        try {
-          spark.conf.set("spark.sql.shuffle.partitions", "8")
-          val q = stream.writeStream
-            .outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", StreamingQueries.scratchSinkDir("stateful-ckpt"))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val q = StreamGate.withConf(
+        spark,
+        "spark.sql.shuffle.partitions" -> "8",
+        VotePipeline.StateStoreProviderKey -> provider,
+      ) {
+        val q = StreamingQueries.startAppendToParquet(stream, out)
+        q.awaitTermination()
+        q
+      }
       val sec = (System.nanoTime() - t0) / 1e9
       val progs = q.recentProgress.toSeq
       val stateRows = progs.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
@@ -109,31 +104,24 @@ object StatefulScalingBench {
     dirs.foreach { case (sf, dir) =>
       println(s"[stateful] === sf=$sf dir=$dir")
       providers.foreach { case (pname, pcls) =>
-        val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        try {
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", pcls)
-          gateStreams(dir).foreach { case (gate, mk) =>
-            runOnce(mk()) // warmup: JIT + source listing out of the timing
-            val r1 = runOnce(mk())
-            val r2 = runOnce(mk())
-            val best = if (r1.sec <= r2.sec) r1 else r2
-            results
-              .getOrElseUpdate(s"$gate|$pname", scala.collection.mutable.Map.empty)(sf) = best
+        gateStreams(dir).foreach { case (gate, mk) =>
+          runOnce(mk(), pcls) // warmup: JIT + source listing out of the timing
+          val r1 = runOnce(mk(), pcls)
+          val r2 = runOnce(mk(), pcls)
+          val best = if (r1.sec <= r2.sec) r1 else r2
+          results
+            .getOrElseUpdate(s"$gate|$pname", scala.collection.mutable.Map.empty)(sf) = best
+          println(
+            f"[stateful] $gate%-18s $pname%-8s sf=$sf ${best.sec}%7.2f s  stateRows=${best.stateRowsMax}  stateMB=${best.stateMemMax / 1e6}%.1f  landed=${best.landedRows}  batches=${best.nBatches}")
+          // a single-batch run never accumulates state across
+          // commits — the measurement this tool exists for would be
+          // vacuous (e.g. a single-file events layout → chunk=1 →
+          // one monolithic AvailableNow batch). Flag it loudly.
+          if (best.nBatches < 2)
             println(
-              f"[stateful] $gate%-18s $pname%-8s sf=$sf ${best.sec}%7.2f s  stateRows=${best.stateRowsMax}  stateMB=${best.stateMemMax / 1e6}%.1f  landed=${best.landedRows}  batches=${best.nBatches}")
-            // a single-batch run never accumulates state across
-            // commits — the measurement this tool exists for would be
-            // vacuous (e.g. a single-file events layout → chunk=1 →
-            // one monolithic AvailableNow batch). Flag it loudly.
-            if (best.nBatches < 2)
-              println(
-                s"[stateful] WARNING: $gate|$pname sf=$sf ran in ${best.nBatches} micro-batch(es) — " +
-                  "state never accumulated across commits; point is NOT a valid scaling measurement " +
-                  s"(events layout has ${partFiles(dir, "events")} part file(s); need >= 8 for ~8 batches)")
-          }
-        } finally prevProvider match {
-          case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+              s"[stateful] WARNING: $gate|$pname sf=$sf ran in ${best.nBatches} micro-batch(es) — " +
+                "state never accumulated across commits; point is NOT a valid scaling measurement " +
+                s"(events layout has ${partFiles(dir, "events")} part file(s); need >= 8 for ~8 batches)")
         }
       }
     }

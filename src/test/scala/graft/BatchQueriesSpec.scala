@@ -55,9 +55,11 @@ class BatchQueriesSpec extends AnyFunSuite {
     assert(spark.sharedState.cacheManager.isEmpty, "the reset left catalog-cached data")
     val persisted = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !baseline(id) }
     assert(persisted.isEmpty, s"the reset left persisted RDDs: ${persisted.values.mkString("; ")}")
-    val views = spark.catalog.listTables().collect()
-      .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name)
-    assert(views.isEmpty, s"the reset left artifact views: ${views.mkString(", ")}")
+    // temp views and warehouse tables alike: an artifact the catalog
+    // memoises must not survive the reset
+    val tables = spark.catalog.listTables().collect()
+      .filter(_.name.startsWith("graft_")).map(_.name)
+    assert(tables.isEmpty, s"the reset left artifact tables or views: ${tables.mkString(", ")}")
     assert(graft.util.Artifacts.occupied.isEmpty,
       s"the reset left memo entries: ${graft.util.Artifacts.occupied.mkString(", ")}")
   }

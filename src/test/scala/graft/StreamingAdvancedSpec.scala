@@ -22,6 +22,31 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     .builder(master = "local[4]", shufflePartitions = 4)
     .getOrCreate()
 
+  test("withConf puts back a set key and unsets an unset key, on return and on throw") {
+    import graft.streaming.StreamGate.withConf
+    val (wasSet, wasUnset) = ("graft.test.withconf.set", "graft.test.withconf.unset")
+    spark.conf.set(wasSet, "before")
+    spark.conf.unset(wasUnset)
+    def assertRestored(): Unit = {
+      assert(spark.conf.getOption(wasSet).contains("before"))
+      assert(spark.conf.getOption(wasUnset).isEmpty)
+    }
+    val seen = withConf(spark, wasSet -> "inside", wasUnset -> "inside") {
+      (spark.conf.get(wasSet), spark.conf.get(wasUnset))
+    }
+    assert(seen == (("inside", "inside")))
+    assertRestored()
+    val err = intercept[IllegalStateException] {
+      withConf(spark, wasSet -> "inside", wasUnset -> "inside") {
+        assert(spark.conf.get(wasSet) == "inside" && spark.conf.get(wasUnset) == "inside")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err.getMessage == "body failed")
+    assertRestored()
+    spark.conf.unset(wasSet)
+  }
+
   test("sink-path changelog collapse equals the in-memory capture path") {
     // runToFinalViaSink (per-batch overwrite dirs + distributed
     // max-batch-id collapse) must produce exactly what the bounded
