@@ -43,7 +43,8 @@ object StreamGate {
     * helper is only for harness queries. Keep the `graft-` prefix:
     * the bench's scratch sweep matches `graft-*`.
     *
-    * Every directory it makes is deleted at JVM exit, NOT at the next
+    * Every directory it makes is deleted at JVM exit
+    * ([[graft.util.ScratchDirs]]), NOT at the next
     * invocation: a previously returned gate result is a LAZY reader
     * over its sink directory, so deleting that directory when the
     * same gate is invoked again would break any holder that
@@ -53,33 +54,21 @@ object StreamGate {
     * The directories are micro-batch-sized, and the exit hook
     * reclaims them all.
     */
-  private[streaming] def scratchDir(prefix: String): String = {
-    val shm = Paths.get("/dev/shm")
-    val d =
-      if (Files.isWritable(shm)) Files.createTempDirectory(shm, prefix).toString
-      else Files.createTempDirectory(prefix).toString
-    scratchDirs.add(d)
-    d
-  }
-  private val scratchDirs = {
-    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      dirs.forEach(p => rm(new java.io.File(p)))
-    }))
-    dirs
-  }
+  private[streaming] def scratchDir(prefix: String): String =
+    graft.util.ScratchDirs.create(prefix, Some(Paths.get("/dev/shm")).filter(Files.isWritable)).toString
 
   /** Run `body` with each of `settings` set in the session conf, then
     * put back each key's previous value, or unset a key that had
-    * none, whether `body` returns or throws. The conf must stay set
-    * until any streaming query started in `body` has fully
-    * TERMINATED (the stream clones the session — and its confs — from
-    * its own execution thread, so restoring right after start() would
-    * race); callers therefore await termination inside `body`.
+    * none, whether `body` returns or throws. A streaming query
+    * started in `body` clones the session, and with it these confs,
+    * inside `start()` (the `StreamExecution` constructor). It reads
+    * its confs from that clone and records the state-relevant ones,
+    * such as shuffle partitions, in its offset log. So the bracket
+    * only has to span `start()`: restoring right after it returns
+    * does not reach the running query (StreamingVotingSpec pins
+    * this).
+    * [[VotePipeline.startCaptureQuery]] brackets just `start()`; the
+    * gate harness brackets the whole run, start to termination.
     */
   def withConf[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
     val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -100,7 +89,10 @@ object StreamGate {
     *    setup/commit cost (and the per-batch shuffles inside
     *    foreachBatch) proportionate. On a real deployment this knob
     *    is sized to state volume, not defaulted to the session's
-    *    shuffle parallelism.
+    *    shuffle parallelism. A capture query started inside a gate
+    *    ([[VotePipeline.startCaptureQuery]]: the bundle's windowed
+    *    aggregation, [[StreamingQueries.runToFinal]]) overrides the 8
+    *    with its own single partition.
     *  - No no-data micro-batches: the gate streams emit on data
     *    (update-mode aggregations emit changed keys, inner joins emit
     *    on match, projections per row), so the trailing no-data

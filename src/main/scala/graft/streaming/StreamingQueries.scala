@@ -120,7 +120,9 @@ object StreamingQueries {
     * monotonically_increasing_id formulation only encoded arrival
     * order through a partition-layout implementation detail.)
     *
-    * Runs under [[StreamGate.GateStreamConf]] (state-store sizing).
+    * Runs under [[StreamGate.GateStreamConf]] (no no-data batches);
+    * its state runs in the capture query's single partition
+    * ([[VotePipeline.startCaptureQuery]]), not the gate's 8.
     */
   def runToFinal(spark: SparkSession, agg: DataFrame, keyCols: Seq[String]): DataFrame = {
     // the capture + max-batch-id collapse is ONE implementation
@@ -260,8 +262,8 @@ object StreamingQueries {
   /** Start (without awaiting) an append-mode stream onto a parquet
     * sink — the building block [[runAppendToParquet]], both StreamGate
     * bundles and the stateful scaling rehearsal share. The caller owns
-    * the conf bracket ([[StreamGate.withConf]]) and must keep it until
-    * the query terminates.
+    * the conf bracket ([[StreamGate.withConf]]), which must span this
+    * call: the query takes its confs when it starts.
     */
   private[graft] def startAppendToParquet(
       stream: DataFrame,

@@ -137,7 +137,10 @@ object VotePipeline {
     * past the cap fails the query loudly instead of quietly growing
     * the driver heap until it OOMs. The guard collects at most
     * cap + 1 rows (a `limit` before the collect), so even the failing
-    * path never materializes the oversized batch driver-side.
+    * path never materializes the oversized batch driver-side. Since
+    * [[startCaptureQuery]] runs the query's state in one partition,
+    * the collect reads one partition, and cap + 1 rows also bound the
+    * bytes a batch sends to the driver.
     */
   final class ChangelogCapture private[streaming] (
       schema: org.apache.spark.sql.types.StructType,
@@ -190,6 +193,19 @@ object VotePipeline {
     * than a partition-layout accident. The checkpoint is a throwaway
     * scratch dir (RAM-backed where available — streaming checkpoints
     * are fsync-heavy on disk-backed tmp).
+    *
+    * State is sized to the contract: the query starts with one shuffle
+    * partition, whatever the caller's session (or a gate's
+    * [[StreamGate.GateStreamConf]]) says. A capture is a bounded-key
+    * changelog whose every row goes to one driver-side consumer, so
+    * N state partitions would only multiply the fixed per-batch cost:
+    * N state-store loads and commits and N tasks per stateful stage,
+    * plus a second Spark job per batch, because the capture's
+    * `limit(cap + 1).collect()` scans partitions incrementally.
+    * Intermediate state, such as the voter dedup ahead of a
+    * per-candidate count, runs as one task too. The stream clones its
+    * session inside `start()` and records the setting in its offset
+    * log, so the caller's session keeps its own value.
     */
   def startCaptureQuery(
       agg: DataFrame,
@@ -206,7 +222,9 @@ object VotePipeline {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         capture.write(batch.toDF(), batchId)
       }
-    val q = (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    val q = StreamGate.withConf(agg.sparkSession, "spark.sql.shuffle.partitions" -> "1") {
+      (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    }
     (q, capture)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.util.ScratchDirs
 
 class DedupClustersSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
@@ -325,7 +326,7 @@ class DedupClustersSpec extends AnyFunSuite {
     // inside the landed era at this sf): docs 75 and 80 (landed era;
     // c1 = 70, c2 = 85 at max id 100) share a segment that no stored
     // doc carries — only the FOLDED index scrubs doc 90's copy
-    val planted = java.nio.file.Files.createTempDirectory("graft-bp-refresh").toString
+    val planted = ScratchDirs.create("graft-bp-refresh").toString
     import spark.implicits._
     val bp = (1 to 8).map(i => s"bp$i").mkString(" ")
     def uniq(id: Int) = (1 to 8).map(i => s"u${id}x$i").mkString(" ")
@@ -399,7 +400,7 @@ class DedupClustersSpec extends AnyFunSuite {
     import spark.implicits._
     val base = (1 to 30).map(i => s"w$i")
     def withTok(tok: String) = (base.take(5) :+ tok).++(base.drop(6)).mkString(" ")
-    val tmpPath = java.nio.file.Files.createTempDirectory("graft-editproj")
+    val tmpPath = ScratchDirs.create("graft-editproj")
     val tmp = tmpPath.toString
     // recursive cleanup at test end — planted corpora must not
     // accumulate in the system temp dir across runs
@@ -603,7 +604,7 @@ class DedupClustersSpec extends AnyFunSuite {
     // (1,4)(2,4); doc 7 shares nothing.
     val a1 = (1 to 12).map(i => s"a$i").mkString(" ")
     val b1 = ((1 to 7).map(i => s"a$i") ++ (1 to 5).map(i => s"x$i")).mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-recall").toString
+    val tmp = ScratchDirs.create("graft-recall").toString
     Seq((1L, a1), (2L, a1), (4L, b1), (7L, (1 to 9).map(i => s"q$i").mkString(" ")))
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'src0' AS source",
@@ -636,7 +637,7 @@ class DedupClustersSpec extends AnyFunSuite {
     // pairs touching the increment. Checked on the driver corpus
     // AND on a generated near-dup corpus where the increment also
     // has internal (new,new) pairs — both candidate paths must fire.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incr").toString
+    val tmp = ScratchDirs.create("graft-incr").toString
     val gen = graft.tools.ScaleCorpus.documents(spark, 6000, vocabSize = 200, nearDupRate = 0.05)
     // the generator's near dups are ADJACENT ids, so no pair
     // straddles a 90% cutoff — plant three cross-increment exact
@@ -726,7 +727,7 @@ class DedupClustersSpec extends AnyFunSuite {
     // pipeline has: a transposed band/row or a broken bucket key
     // flattens the curve and fails this spec long before it shows
     // in pair counts.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scurve").toString
+    val tmp = ScratchDirs.create("graft-scurve").toString
     graft.tools.ScaleCorpus.documents(spark, 8000, vocabSize = 200, nearDupRate = 0.05)
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     Dedup.invalidate()

@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Expectations
 import graft.sources.Tables
+import graft.util.ScratchDirs
 
 /** The expectations audit must DETECT, not just count zeros: inject
   * one violation per check family into a copied corpus and assert
@@ -28,7 +27,7 @@ class ExpectationsSpec extends AnyFunSuite {
   }
 
   test("injected violations flip exactly the right checks with exact counts") {
-    val tmp = Files.createTempDirectory("graft-expect").toString
+    val tmp = ScratchDirs.create("graft-expect").toString
     // copy the audited tables, corrupting two of them
     for (t <- Seq("lineitem", "customer", "embeddings"))
       Tables(spark, sf, t).write.mode("overwrite").parquet(s"$tmp/$t.parquet")

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
+import graft.util.ScratchDirs
 
 /** Source-format coverage: the engine's operators are format-agnostic
   * — the same query over parquet, JSON, and CSV copies of a table
@@ -20,9 +19,8 @@ class FormatsSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("compaction rewrites a many-small-files table into size-targeted files, content-identical") {
-    import java.nio.file.Files
-    val fragmented = Files.createTempDirectory("graft-frag").toString
-    val compacted = Files.createTempDirectory("graft-comp").toString
+    val fragmented = ScratchDirs.create("graft-frag").toString
+    val compacted = ScratchDirs.create("graft-comp").toString
     // simulate micro-batch accretion: 40 tiny files
     val src = graft.sources.Tables(spark, sf, "orders")
     src.repartition(40).write.mode("overwrite").parquet(fragmented)
@@ -40,9 +38,8 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("schema evolution: mergeSchema unions columns across file generations") {
-    import java.nio.file.Files
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evolve").toString
+    val dir = ScratchDirs.create("graft-evolve").toString
     // generation 1: (doc_id, text) — generation 2 adds a lang column
     Seq((1L, "old row")).toDF("doc_id", "text")
       .write.mode("append").parquet(dir)
@@ -57,7 +54,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("same aggregation over parquet, json, and csv copies agrees") {
     val orders = Tables(spark, sf, "orders")
-    val dir = Files.createTempDirectory("graft-fmt").toString
+    val dir = ScratchDirs.create("graft-fmt").toString
     orders.write.mode("overwrite").json(s"$dir/json")
     orders.write.mode("overwrite").option("header", "true").csv(s"$dir/csv")
 
@@ -84,9 +81,9 @@ class FormatsSpec extends AnyFunSuite {
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .limit(500)
       .cache()
-    val dirNanos = Files.createTempDirectory("graft-ts-nanos").toString
-    val dirNtz = Files.createTempDirectory("graft-ts-ntz").toString
-    val dirLtz = Files.createTempDirectory("graft-ts-ltz").toString
+    val dirNanos = ScratchDirs.create("graft-ts-nanos").toString
+    val dirNtz = ScratchDirs.create("graft-ts-ntz").toString
+    val dirLtz = ScratchDirs.create("graft-ts-ltz").toString
     // TIMESTAMP(NANOS) surfaces as a raw nanos long under nanosAsLong;
     // a written LongType column exercises the identical dispatch arm
     base.withColumn("ts", expr("unix_micros(ts) * 1000"))
@@ -144,7 +141,7 @@ class FormatsSpec extends AnyFunSuite {
       "ntz" -> base,
     )
     val prints = encodings.map { case (label, df) =>
-      val dir = Files.createTempDirectory(s"graft-date-$label").toString
+      val dir = ScratchDirs.create(s"graft-date-$label").toString
       df.write.parquet(s"$dir/orders.parquet")
       val back = Tables(spark, dir, "orders")
       assert(back.schema("o_orderdate").dataType == TimestampNTZType,
@@ -171,7 +168,7 @@ class FormatsSpec extends AnyFunSuite {
     // values as list<double> reads back bit-identically instead of
     // failing type-check across the similarity gate family
     val base = Tables(spark, sf, "embeddings").limit(100).cache()
-    val dir = Files.createTempDirectory("graft-emb-f64").toString
+    val dir = ScratchDirs.create("graft-emb-f64").toString
     base.withColumn("embedding", col("embedding").cast(ArrayType(DoubleType)))
       .write.parquet(s"$dir/embeddings.parquet")
     val back = Tables(spark, dir, "embeddings")
@@ -202,7 +199,7 @@ class FormatsSpec extends AnyFunSuite {
 
     // documents: strings → binary, int64 ids → int32
     val docBase = Tables(spark, sf, "documents").limit(200).cache()
-    val docDir = Files.createTempDirectory("graft-doc-drift").toString
+    val docDir = ScratchDirs.create("graft-doc-drift").toString
     docBase
       .withColumn("text", col("text").cast(BinaryType))
       .withColumn("lang", col("lang").cast(BinaryType))
@@ -224,7 +221,7 @@ class FormatsSpec extends AnyFunSuite {
 
     // events: props → binary, value → float, user_id → int32 (with ts untouched)
     val evBase = Tables(spark, sf, "events").limit(200).cache()
-    val evDir = Files.createTempDirectory("graft-ev-drift").toString
+    val evDir = ScratchDirs.create("graft-ev-drift").toString
     evBase
       .withColumn("props", col("props").cast(BinaryType))
       .withColumn("value", col("value").cast(FloatType))
@@ -257,7 +254,7 @@ class FormatsSpec extends AnyFunSuite {
     // nation: int32 keys widened to int64 must cast back (the
     // downward direction — exact for a re-encode of the same values)
     val natBase = Tables(spark, sf, "nation").cache()
-    val natDir = Files.createTempDirectory("graft-nat-drift").toString
+    val natDir = ScratchDirs.create("graft-nat-drift").toString
     natBase
       .withColumn("n_nationkey", col("n_nationkey").cast(LongType))
       .withColumn("n_regionkey", col("n_regionkey").cast(LongType))

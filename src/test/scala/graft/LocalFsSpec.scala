@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.util.{ForkFreeLocalFileSystem, ForkFreeLocalFs, ForkFreeRawLocalFileSystem, LocalFs}
+import graft.util.{ForkFreeLocalFileSystem, ForkFreeLocalFs, ForkFreeRawLocalFileSystem, LocalFs, ScratchDirs}
 
 /** The fork-free local file system answers exactly as stock Hadoop
   * does: the same POSIX mode bits after every way a file or directory
@@ -40,7 +40,7 @@ class LocalFsSpec extends AnyFunSuite {
   private def mode(p: JPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
 
   private def withRoots(body: (JPath, JPath) => Unit): Unit = {
-    val base = Files.createTempDirectory("graft-localfs-spec")
+    val base = ScratchDirs.create("graft-localfs-spec")
     try body(Files.createDirectory(base.resolve("stock")), Files.createDirectory(base.resolve("graft")))
     finally Option(base.toFile).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
   }

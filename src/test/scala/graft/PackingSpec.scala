@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Packing
+import graft.util.ScratchDirs
 
 class PackingSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
@@ -53,7 +54,7 @@ class PackingSpec extends AnyFunSuite {
 
   test("sub-splits of one source pack independently (offsets restart per split)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pack").toString
+    val dir = ScratchDirs.create("graft-pack").toString
     // one source, ten docs; doc i has i+1 whitespace tokens
     (0L until 10L).map(i => (i, "web", ("w " * (i + 1).toInt).trim))
       .toDF("doc_id", "source", "text")

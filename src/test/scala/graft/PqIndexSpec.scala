@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.PqIndex
 import graft.sources.Tables
+import graft.util.ScratchDirs
 
 /** Invariants of the product-quantization family (PqIndex). The
   * oracle gates pin cross-engine value equality; these pin the
@@ -250,7 +251,7 @@ class PqIndexSpec extends AnyFunSuite {
     // synthetic corpus whose label mix (hence v1-code occupancy) is
     // identical in both eras: labels cycle mod 10 and the embedding
     // is a pure function of the label
-    val tmp = java.nio.file.Files.createTempDirectory("graft-nodrift").toString
+    val tmp = ScratchDirs.create("graft-nodrift").toString
     spark
       .range(200)
       .select(

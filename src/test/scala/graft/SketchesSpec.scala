@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Sketches
 import graft.sources.Tables
+import graft.util.ScratchDirs
 
 class SketchesSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.01"
@@ -35,7 +34,7 @@ class SketchesSpec extends AnyFunSuite {
   }
 
   test("partitioned write enables partition pruning on read") {
-    val out = Files.createTempDirectory("graft-part").toString
+    val out = ScratchDirs.create("graft-part").toString
     Tables(spark, sf, "events")
       .write.mode("overwrite").partitionBy("event_type").parquet(out)
     val pruned = spark.read.parquet(out).filter(col("event_type") === "click")

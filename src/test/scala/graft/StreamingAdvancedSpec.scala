@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.VotingOps
 import graft.streaming.{Sessionize, VotePipeline}
+import graft.util.ScratchDirs
 
 /** Advanced streaming semantics: checkpoint/restart exactly-once
   * resume (SURVEY ST4/ST5), stream-static broadcast enrichment (J1),
@@ -57,7 +58,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
       .latestEventPerKey(graft.streaming.StreamingQueries.eventsStream(spark, dir))
     val viaCapture = graft.streaming.StreamingQueries
       .runToFinal(spark, agg, Seq("user_id")).collect().toSet
-    val out = Files.createTempDirectory("graft-rtf-sink").toString + "/out"
+    val out = ScratchDirs.create("graft-rtf-sink").toString + "/out"
     val viaSink = graft.streaming.StreamingQueries
       .runToFinalViaSink(spark, agg, Seq("user_id"), out).collect().toSet
     assert(viaSink == viaCapture, "sink-path collapse diverged from the capture path")
@@ -188,8 +189,8 @@ class StreamingAdvancedSpec extends AnyFunSuite {
 
   test("checkpoint restart resumes from offsets without double counting") {
     import spark.implicits._
-    val inDir = Files.createTempDirectory("graft-in").toString
-    val ckpt = Files.createTempDirectory("graft-ck").toString
+    val inDir = ScratchDirs.create("graft-in").toString
+    val ckpt = ScratchDirs.create("graft-ck").toString
 
     // wave 1: rows 0-49
     (0 until 50).map(i => i.toString).toDF("value")
@@ -221,7 +222,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     // restarted from the same checkpoint (offset log + dedup state
     // store both resume)
     val sf01 = "/root/testdata/sf0.1"
-    val inDir = Files.createTempDirectory("graft-restart-in").toString
+    val inDir = ScratchDirs.create("graft-restart-in").toString
     graft.sources.Tables(spark, sf01, "events")
       .repartition(24)
       .write.mode("overwrite")
@@ -234,15 +235,15 @@ class StreamingAdvancedSpec extends AnyFunSuite {
       .trigger(Trigger.AvailableNow()).start()
 
     // the uninterrupted reference run
-    val outRef = Files.createTempDirectory("graft-restart-ref").toString + "/out"
-    start(outRef, Files.createTempDirectory("graft-restart-refck").toString, "restart_ref")
+    val outRef = ScratchDirs.create("graft-restart-ref").toString + "/out"
+    start(outRef, ScratchDirs.create("graft-restart-refck").toString, "restart_ref")
       .awaitTermination()
 
     // the victim run: an event-driven kill at the 3rd data-bearing
     // commit (a sleep-poll alone races a fast drain — r10 review);
     // the poll below is only the backstop for a lost listener event
-    val outV = Files.createTempDirectory("graft-restart-v").toString + "/out"
-    val ckptV = Files.createTempDirectory("graft-restart-vck").toString
+    val outV = ScratchDirs.create("graft-restart-v").toString + "/out"
+    val ckptV = ScratchDirs.create("graft-restart-vck").toString
     val commits = new java.util.concurrent.atomic.AtomicInteger(0)
     val killer = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
@@ -362,7 +363,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
 
   test("stream gate bundle yields empty typed results when the source has no files to stream") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-empty-corpus").toString
+    val dir = ScratchDirs.create("graft-empty-corpus").toString
     // corpus layout with batch-readable tables; the streaming glob
     // (events.parquet / embeddings.parquet as FILES) matches nothing,
     // so every bundle query runs ZERO micro-batches — the
@@ -384,11 +385,11 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     // zero-batch AvailableNow run leaves only the sink's metadata dir
     // and the schema'd read-back must yield an empty typed relation,
     // not a path/inference error
-    val ijOut = Files.createTempDirectory("graft-empty-ij").toString + "/out"
+    val ijOut = ScratchDirs.create("graft-empty-ij").toString + "/out"
     val ijSink = graft.streaming.StreamingQueries.intervalJoinViaSink(spark, dir, ijOut)
     assert(ijSink.count() == 0)
     assert(ijSink.schema.fieldNames.toSeq == Seq("event_a", "event_b", "type_a", "type_b"))
-    val simOut = Files.createTempDirectory("graft-empty-sim").toString + "/out"
+    val simOut = ScratchDirs.create("graft-empty-sim").toString + "/out"
     assert(graft.streaming.StreamingQueries.similarityTopKViaSink(spark, dir, simOut).count() == 0)
   }
 
@@ -418,7 +419,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     // interval join: appends written to a distributed parquet sink and
     // read back — must equal the bundle's foreachBatch-capture variant
-    val ijOut = Files.createTempDirectory("graft-sink-ij").toString + "/out"
+    val ijOut = ScratchDirs.create("graft-sink-ij").toString + "/out"
     val ijSink = graft.streaming.StreamingQueries.intervalJoinViaSink(spark, dir, ijOut)
     val ijGate = graft.streaming.StreamGate.intervalJoin(spark, dir)
     assert(ijSink.count() == ijGate.count(), "sink path lost or duplicated appended rows")
@@ -428,7 +429,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     )
     // similarity: sink-table rank via the bounded TopKAggregator must
     // equal the gate's post-completion window rank
-    val simOut = Files.createTempDirectory("graft-sink-sim").toString + "/out"
+    val simOut = ScratchDirs.create("graft-sink-sim").toString + "/out"
     val simSink = graft.streaming.StreamingQueries.similarityTopKViaSink(spark, dir, simOut)
     val simGate = graft.streaming.StreamGate.similarityTopK(spark, dir)
     assert(
@@ -439,7 +440,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
 
   test("streaming dedup through the parquet sink yields exactly the batch distinct key set") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-sink-dd").toString + "/out"
+    val out = ScratchDirs.create("graft-sink-dd").toString + "/out"
     val sunk = graft.streaming.StreamingQueries.streamDedupViaSink(spark, dir, out)
     val batch = spark.read.parquet(s"$dir/events.parquet")
       .select("user_id", "event_type")
@@ -587,7 +588,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
   test("streaming quality router partitions the corpus: keep sink == batch rule, keep ∪ reject = all") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-sink-route").toString
+    val out = ScratchDirs.create("graft-sink-route").toString
     val keep = graft.streaming.StreamingQueries.qualityRouteViaSink(spark, dir, out)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val expectedKeep = docs
@@ -608,11 +609,11 @@ class StreamingAdvancedSpec extends AnyFunSuite {
 
   test("quality router quarantines NULL-text docs on the reject side (nothing dropped)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-null-docs").toString
+    val dir = ScratchDirs.create("graft-null-docs").toString
     // the corpus must be a single FILE named documents.parquet (like
     // the driver testdata): the streaming source's pathGlobFilter
     // matches leaf file names, not directory names
-    val stage = Files.createTempDirectory("graft-null-stage").toString
+    val stage = ScratchDirs.create("graft-null-stage").toString
     Seq[(Long, Option[String], String, String, Long)](
       // 30 tokens, mean length 4.1, stopwords {the, a}: passes all rules
       (0L, Some(("the quick brown fox jumps over a lazy sleeping dog " * 3).trim), "web", "en", 152L),
@@ -624,7 +625,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     val part = new java.io.File(s"$stage/w").listFiles()
       .find(f => f.getName.endsWith(".parquet")).get
     Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    val out = Files.createTempDirectory("graft-null-route").toString
+    val out = ScratchDirs.create("graft-null-route").toString
     val keep = graft.streaming.StreamingQueries.qualityRouteViaSink(spark, dir, out)
     val reject = spark.read
       .schema(keep.schema)
@@ -717,7 +718,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     val agg = Sessionize.sessionWindowAgg(stream.toDF(), "10 seconds")
     val q = agg.writeStream.outputMode("append").format("memory")
       .queryName("sess_builtin")
-      .option("checkpointLocation", Files.createTempDirectory("graft-sb").toString)
+      .option("checkpointLocation", ScratchDirs.create("graft-sb").toString)
       .start()
     q.processAllAvailable()
     stream.addData(ev(9, 30, 0, 0.0))
@@ -737,7 +738,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     val out = Sessionize.sessions(stream.toDS(), gapMs = 10000)
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("sess_custom")
-      .option("checkpointLocation", Files.createTempDirectory("graft-sess").toString)
+      .option("checkpointLocation", ScratchDirs.create("graft-sess").toString)
       .start()
 
     def ev(u: Long, min: Int, sec: Int, v: Double) =
@@ -769,7 +770,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
     val q = agg.writeStream.outputMode("append").format("memory")
       .queryName("late_test")
-      .option("checkpointLocation", Files.createTempDirectory("graft-late").toString)
+      .option("checkpointLocation", ScratchDirs.create("graft-late").toString)
       .start()
     def at(sec: Int) = Timestamp.valueOf(f"2024-01-01 10:${sec / 60}%02d:${sec % 60}%02d")
     stream.addData(Sessionize.SessionEvent(1, at(1), 1.0), Sessionize.SessionEvent(1, at(2), 1.0))
@@ -796,7 +797,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     val out = Transitions.track(stream.toDS())
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("trans_test")
-      .option("checkpointLocation", Files.createTempDirectory("graft-trans").toString)
+      .option("checkpointLocation", ScratchDirs.create("graft-trans").toString)
       .start()
     // batch 1: user 1 rows arrive OUT of order inside the batch (the
     // tracker must sort by (us, event_id) before chaining); user 2

@@ -15,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.VotingOps
 import graft.sources.VoteIngest
 import graft.streaming.VotePipeline
+import graft.util.ScratchDirs
 
 /** Reference-parity streaming semantics (SURVEY §0, §2.7), driven by
   * MemoryStream with reference-shaped JSON: the heterogeneous topic
@@ -151,6 +152,74 @@ class StreamingVotingSpec extends AnyFunSuite {
       s"expected the row-cap guard to fire, got: ${messages(err).mkString(" | ")}")
   }
 
+  test("a capture query runs every state operator in one partition and leaves the session's value") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.shuffle.partitions"
+    assert(spark.conf.get(key) == "4")
+    val stream = MemoryStream[String]
+    stream.addData(voteJson(1, "Ohio", 1), voteJson(1, "Ohio", 1), voteJson(2, "Ohio", 2))
+    val parsed = VotePipeline.parsedStream(stream.toDF().select($"value"))
+    // two state operators: the voter dedup and the per-candidate count
+    val votes = VotingOps.votesPerCandidate(VotingOps.dedupVotesStreaming(parsed.filter($"vote".isNotNull)))
+    val (q, _) = VotePipeline.startCaptureQuery(votes, "one_partition_test")
+    try {
+      assert(spark.conf.get(key) == "4", "start() returned with the capture's setting left on the session")
+      q.processAllAvailable()
+      val ops = q.lastProgress.stateOperators
+      assert(ops.length == 2, ops.map(_.operatorName).mkString(", "))
+      assert(ops.forall(_.numShufflePartitions == 1), ops.map(o => o.operatorName -> o.numShufflePartitions).mkString(", "))
+    } finally q.stop()
+    assert(spark.conf.get(key) == "4")
+  }
+
+  test("a capture query runs one Spark job per micro-batch and matches its batch twin") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = ScratchDirs.create("graft-jobs-per-batch")
+    val input = Files.createDirectory(base.resolve("in"))
+    (0 until 3).foreach { k =>
+      val lines = (1 to 5).map(i => voteJson(10 * k + i, "Ohio", i % 3))
+      Files.move(Files.write(base.resolve(s"$k.tmp"), lines.asJava), input.resolve(s"$k.json"))
+    }
+    // (query id, batch id) of every job, or "marker" for the barrier job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        def prop(k: String) = p.flatMap(ps => Option(ps.getProperty(k))).getOrElse("")
+        jobs.add(prop("sql.streaming.queryId") -> prop("streaming.sql.batchId"))
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val raw = VoteIngest.readStream(spark, "text", input.toString, Map("maxFilesPerTrigger" -> "1"))
+      val votes = VotePipeline.aggregates(VotePipeline.parsedStream(raw))._1
+      val (q, cap) = VotePipeline.startCaptureQuery(votes, "jobs_per_batch_test", availableNow = true)
+      q.awaitTermination()
+      // the listener bus delivers in order: once the marker job is
+      // seen, every job of the finished query has been counted
+      spark.sparkContext.setLocalProperty("sql.streaming.queryId", "marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("sql.streaming.queryId", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.asScala.exists(_._1 == "marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.asScala.exists(_._1 == "marker"), "the listener never saw the marker job")
+
+      val perBatch = jobs.asScala.toSeq.filter(_._1 == q.id.toString).groupBy(_._2).view.mapValues(_.size).toMap
+      val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSeq
+      assert(dataBatches.size == 3, q.recentProgress.map(p => p.batchId -> p.numInputRows).mkString(", "))
+      assert(dataBatches.forall(b => perBatch.get(b).contains(1)), s"jobs per batch: $perBatch")
+      assert(perBatch.values.forall(_ == 1), s"jobs per batch: $perBatch")
+
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.select("candidate_id", "total_votes").collect().map(_.toString).toSeq.sorted
+      val batch = VotingOps.votesPerCandidate(VoteIngest.parse(spark.read.text(input.toString)))
+      assert(sorted(cap.latest(spark, Seq("candidate_id"))) == sorted(batch))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("malformed JSON is captured, not silently dropped") {
     import spark.implicits._
     val df = Seq("{not json at all", voterJson(1, "Illinois")).toDF("value")
@@ -161,7 +230,7 @@ class StreamingVotingSpec extends AnyFunSuite {
 
   test("a corrupted state file fails the restart loudly instead of serving a wrong count") {
     import scala.jdk.CollectionConverters._
-    val base = Files.createTempDirectory("graft-state-corrupt")
+    val base = ScratchDirs.create("graft-state-corrupt")
     val input = Files.createDirectory(base.resolve("in"))
     val checkpoint = base.resolve("ckpt").toString
     def addFile(n: Int, lines: String*): Unit = {

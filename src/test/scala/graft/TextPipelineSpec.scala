@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Sampling, TextAnalysis}
+import graft.util.ScratchDirs
 
 /** Invariants for the text-pipeline operators (exact values are
   * pinned by the DuckDB oracle gate; these specs pin the properties
@@ -374,7 +375,7 @@ class TextPipelineSpec extends AnyFunSuite {
     val d1 = shared + " " + (1 to 30).map(i => s"b$i").mkString(" ")
     val d2 = shared + " " + (1 to 30).map(i => s"c$i").mkString(" ")
     val d3 = (1 to 80).map(i => s"z$i").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cdcdedup").toString
+    val tmp = ScratchDirs.create("graft-cdcdedup").toString
     Seq((1L, d1), (2L, d2), (3L, d3))
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'src0' AS source",
@@ -410,7 +411,7 @@ class TextPipelineSpec extends AnyFunSuite {
     val d1 = passage + " " + (1 to 12).map(i => s"b$i").mkString(" ")
     val d2 = (1 to 12).map(i => s"c$i").mkString(" ") + " " + passage
     val d3 = (1 to 30).map(i => s"z$i").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-winnow").toString
+    val tmp = ScratchDirs.create("graft-winnow").toString
     Seq((1L, d1), (2L, d2), (3L, d3))
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'src0' AS source",
@@ -433,7 +434,7 @@ class TextPipelineSpec extends AnyFunSuite {
     //     greedy leftmost gives aaab→Aab (the second 'aa' overlaps)
     // r2: over {Aab:2, ab:1}: Aa=2, ab=3 (2 words) → merge ab→B
     // r3: over {AB:2, B:1}: AB=2 (1 word) → merge AB→C
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val tmp = ScratchDirs.create("graft-bpe").toString
     Seq((1L, "aaab aaab ab"))
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'src0' AS source",
@@ -450,7 +451,7 @@ class TextPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     // same corpus as the trainer pin; applying aa→A, ab→B, AB→C to
     // "aaab aaab ab" gives "C C B": 10 symbols → 3
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bpe-enc").toString
+    val tmp = ScratchDirs.create("graft-bpe-enc").toString
     Seq((1L, "aaab aaab ab"))
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'src0' AS source",
@@ -538,7 +539,7 @@ class TextPipelineSpec extends AnyFunSuite {
 
   test("temperature mix flattens a skewed source distribution toward sqrt shares") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-temp").toString
+    val tmp = ScratchDirs.create("graft-temp").toString
     // 1000 docs from src_big, 40 from src_small — raw share 4%, the
     // T=2 rule should lift it toward sqrt(40)/(sqrt(40)+sqrt(1000)) ≈ 17%
     (0 until 1040)
