@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.RelationalQueries.Num._
 import graft.sources.Tables
@@ -91,8 +90,7 @@ object StreamGate {
     *    is sized to state volume, not defaulted to the session's
     *    shuffle parallelism. A capture query started inside a gate
     *    ([[VotePipeline.startCaptureQuery]]: the bundle's windowed
-    *    aggregation, [[StreamingQueries.runToFinal]]) overrides the 8
-    *    with its own single partition.
+    *    aggregation) overrides the 8 with its own single partition.
     *  - No no-data micro-batches: the gate streams emit on data
     *    (update-mode aggregations emit changed keys, inner joins emit
     *    on match, projections per row), so the trailing no-data
@@ -243,7 +241,7 @@ object StreamGate {
           (
             "route",
             Try(StreamingQueries.startQualityRoute(spark, dir, routeOut)),
-            () => StreamingQueries.readQualityRouteKeep(spark, routeOut),
+            () => StreamingQueries.qualityRouteSinks(routeOut)._1.changelog(spark),
           ),
         )
       started.map { case (name, q, read) =>
@@ -290,28 +288,18 @@ object StreamGate {
     // few thousand keys, where per-batch native store setup dominates.
     withConf(spark, GateStreamConf: _*) {
       // 1) shared fan-out pass: both stateless aggregates as partials,
-      // each into its own changelog capture. The captures store each
-      // batch's partials keyed by batch id and REPLACED per
-      // invocation: foreachBatch is at-least-once, so a retried
-      // micro-batch must overwrite its own partials, not append a
-      // second copy (which would double-count the exact integer-cents
-      // sums). Their schemas come from the partials over the stream
-      // frame, so an empty source (zero micro-batches) still yields
-      // typed results.
+      // each into its own changelog capture, from one persisted batch.
+      // A retried micro-batch replaces its own partials (BatchSink),
+      // so the exact integer-cents sums cannot double-count. The
+      // capture schemas come from the partials over the stream frame,
+      // so an empty source (zero micro-batches) still yields typed
+      // results.
       val events = StreamingQueries.eventsStream(spark, dir)
       val votesCapture = new VotePipeline.ChangelogCapture(votesPartial(events).schema)
       val turnoutCapture = new VotePipeline.ChangelogCapture(turnoutPartial(events).schema)
-      val qFanOut = events.writeStream
-        .option("checkpointLocation", scratchDir("graft-ckpt-gate"))
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val b = batch.persist()
-          try {
-            votesCapture.write(votesPartial(b), batchId)
-            turnoutCapture.write(turnoutPartial(b), batchId)
-          } finally { b.unpersist(); () }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val qFanOut = BatchSink.start(
+        events, "gate", None, availableNow = true,
+        (votesPartial _) -> votesCapture, (turnoutPartial _) -> turnoutCapture)
 
       // 2) stateful windowed aggregation: update-mode changelog
       // captured with its EXPLICIT batch id (update mode emits each

@@ -1,26 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.RelationalQueries.Num._
 import graft.sources.Tables
 
-/** Structured Streaming twins of the batch event aggregations, run
-  * through a REAL streaming query (file source → incremental
-  * state-store aggregation → update-mode memory sink) and collapsed
-  * to final values. The driver's DuckDB oracle checks them against
-  * the same SQL as the batch twins — i.e. streaming execution itself
-  * is inside the correctness gate, which is the property the
-  * reference job (spark-streaming.py) actually needs: the changelog's
-  * latest-per-key must equal the batch recompute.
+/** Structured Streaming twins of the batch gates, run through REAL
+  * streaming queries (file source → incremental state-store operators
+  * → sink) and read back as final values. The driver's DuckDB oracle
+  * checks them against the same SQL as the batch twins — i.e.
+  * streaming execution itself is inside the correctness gate, which
+  * is the property the reference job (spark-streaming.py) actually
+  * needs: the changelog's latest-per-key must equal the batch
+  * recompute.
   *
-  * Scale notes: the streaming aggregation state is bounded by group
-  * cardinality (|event_type|, |hour×type|), not stream length;
-  * update-mode emits only changed keys per micro-batch. On a real
-  * cluster the memory sink becomes the Kafka sink (VotePipeline) and
-  * the file source becomes the Kafka source — same plan otherwise.
+  * Two sinks serve them. An update-mode changelog lands one parquet
+  * directory per micro-batch ([[BatchDirSink]] via
+  * [[runToFinalViaSink]]) and collapses to the max batch id per key
+  * on read-back; an append stream lands on the parquet file sink
+  * ([[runAppendToParquet]]). Neither sends a row through the driver.
+  * On a real cluster both become Kafka sinks (VotePipeline) and the
+  * file source becomes the Kafka source — same plan otherwise.
   */
 object StreamingQueries {
 
@@ -97,54 +99,39 @@ object StreamingQueries {
     * canonicalizer in [[graft.sources.Tables.canonicalizeEventTs]] is
     * shared with the batch path so both see one stable TimestampType.
     */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    eventsStreamWith(spark, dir, Map.empty)
+
+  private def eventsStreamWith(
+      spark: SparkSession, dir: String, options: Map[String, String]): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fallback = new StructType()
-      .add("event_id", LongType)
-      .add("ts", TimestampType)
-      .add("user_id", LongType)
-      .add("event_type", StringType)
-      .add("value", DoubleType)
-      .add("props", StringType)
-    tableStream(spark, dir, "events", fallback)
+    tableStream(spark, dir, "events", EventsFallback, options)
   }
+
+  /** The declared schemas of the streamed tables, for a source with no
+    * footer to probe yet ([[probeFileSchema]]).
+    */
+  private val EventsFallback: StructType = new StructType()
+    .add("event_id", LongType)
+    .add("ts", TimestampType)
+    .add("user_id", LongType)
+    .add("event_type", StringType)
+    .add("value", DoubleType)
+    .add("props", StringType)
+
+  private val EmbeddingsFallback: StructType = new StructType()
+    .add("vec_id", LongType)
+    .add("embedding", ArrayType(FloatType))
+    .add("label", IntegerType)
 
   /** Run one update-mode streaming aggregation to completion
     * (AvailableNow) and return the changelog collapsed to its final
-    * per-key values.
-    *
-    * The collapse key is the EXPLICT micro-batch id delivered by
-    * foreachBatch — update mode emits each changed key at most once
-    * per batch, so "row with the max batch id per key" is the exact
-    * latest-value contract. (The previous memory-sink +
-    * monotonically_increasing_id formulation only encoded arrival
-    * order through a partition-layout implementation detail.)
-    *
-    * Runs under [[StreamGate.GateStreamConf]] (no no-data batches);
-    * its state runs in the capture query's single partition
-    * ([[VotePipeline.startCaptureQuery]]), not the gate's 8.
-    */
-  def runToFinal(spark: SparkSession, agg: DataFrame, keyCols: Seq[String]): DataFrame = {
-    // the capture + max-batch-id collapse is ONE implementation
-    // (VotePipeline.ChangelogCapture), shared with every
-    // startCaptureQuery harness consumer — not a second copy here
-    StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
-      val (q, capture) =
-        VotePipeline.startCaptureQuery(agg, "graft_run_to_final", availableNow = true)
-      q.awaitTermination()
-      capture.latest(spark, keyCols)
-    }
-  }
-
-  /** Production twin of [[runToFinal]] for changelogs whose key
-    * domain SCALES WITH THE CORPUS (per-user state): each update-mode
-    * micro-batch lands on its own parquet directory (`b<batchId>`,
-    * overwrite — the at-least-once-idempotent contract the quality
-    * router uses) and the latest-per-key collapse runs DISTRIBUTEDLY
-    * on read-back (update mode emits a changed key at most once per
-    * batch, so max-batch-id per key is exact). No row ever visits
-    * the driver; [[runToFinal]]'s in-memory capture remains only for
-    * key-cardinality-bounded changelogs.
+    * per-key values. Each micro-batch lands on its own parquet
+    * directory ([[BatchDirSink]]: `b<batchId>`, overwrite — the
+    * at-least-once-idempotent contract) and the max-batch-id collapse
+    * runs DISTRIBUTEDLY on read-back, so no row ever visits the
+    * driver — the shape for changelogs whose keys (per-user state)
+    * scale with the corpus. Runs under [[StreamGate.GateStreamConf]].
     */
   def runToFinalViaSink(
       spark: SparkSession,
@@ -152,48 +139,19 @@ object StreamingQueries {
       keyCols: Seq[String],
       outDir: String,
   ): DataFrame = {
-    val outSchema = agg.schema
+    val sink = new BatchDirSink(outDir, agg.schema)
     StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
-      agg.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$outDir/b$batchId"); ()
-        }
-        .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-rtf"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      BatchSink.start(agg, "rtf", None, availableNow = true, (identity[DataFrame] _) -> sink)
         .awaitTermination()
     }
-    val dirs = batchDirs(outDir)
-    if (dirs.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    else {
-      val withBid = dirs.toSeq.map { d =>
-        spark.read.schema(outSchema).parquet(d.getPath)
-          .withColumn("__bid", lit(d.getName.drop(1).toLong))
-      }.reduce(_ unionAll _)
-      val valueCols = outSchema.fieldNames.toSeq.filterNot(keyCols.contains)
-      withBid
-        .groupBy(keyCols.map(col): _*)
-        .agg(max_by(struct(valueCols.map(col): _*), col("__bid")).as("__last"))
-        .select(keyCols.map(col) ++ valueCols.map(n => col("__last").getField(n).as(n)): _*)
-    }
+    sink.latest(spark, keyCols)
   }
-
-  /** The per-batch output directories (`b<batchId>`) under `dir`,
-    * selected by NAME, never by isDirectory alone: a crashed or
-    * retried batch write can leave a _temporary staging directory
-    * behind, and a bare directory glob would read (or fail on) its
-    * partial files.
-    */
-  private def batchDirs(dir: String): Seq[java.io.File] =
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
 
   /** The stream side of the similarity gate: embedding corpus as a
     * stream, scored against the broadcast STATIC query set
     * (stream-static join — "match incoming documents against a fixed
-    * index"). Shared by [[similarityTopKViaSink]] and the StreamGate
-    * bundle — both run it through a distributed parquet append sink.
+    * index"). Shared by both StreamGate bundles — each runs it
+    * through a distributed parquet append sink.
     * Scored rows append; the per-query top-k is ranked after
     * completion, so the final result equals the batch brute-force
     * top-k and shares its oracle SQL. At scale the append sink
@@ -207,11 +165,7 @@ object StreamingQueries {
     // casts back to the array<float> contract the typed cosine
     // expression requires (exact for double re-encodings of the same
     // f32 values)
-    val fallback = new StructType()
-      .add("vec_id", LongType)
-      .add("embedding", ArrayType(FloatType))
-      .add("label", IntegerType)
-    val corpus = tableStream(spark, dir, "embeddings", fallback)
+    val corpus = tableStream(spark, dir, "embeddings", EmbeddingsFallback)
       .select(
         col("vec_id").as("neighbor_id"),
         col("embedding").as("ce"))
@@ -229,7 +183,7 @@ object StreamingQueries {
     * (rows older than watermark + interval are evicted), which is
     * what makes a stream-stream join runnable indefinitely at 100 TB.
     * Inner interval joins emit on match, so append output is exact.
-    * Shared by the StreamGate bundle and [[intervalJoinViaSink]].
+    * Shared by both StreamGate bundles.
     */
   def intervalJoinStream(spark: SparkSession, dir: String): DataFrame = {
     // both sides derive from ONE watermarked source (a streaming
@@ -261,7 +215,9 @@ object StreamingQueries {
 
   /** Start (without awaiting) an append-mode stream onto a parquet
     * sink — the building block [[runAppendToParquet]], both StreamGate
-    * bundles and the stateful scaling rehearsal share. The caller owns
+    * bundles and the stateful scaling rehearsal share. With
+    * [[BatchSink.start]] and [[VotePipeline.startQuery]] it is one of
+    * the program's three stream starts. The caller owns
     * the conf bracket ([[StreamGate.withConf]]), which must span this
     * call: the query takes its confs when it starts.
     */
@@ -298,75 +254,7 @@ object StreamingQueries {
     spark.read.schema(stream.schema).parquet(outPath)
   }
 
-  /** Sink-path twin of the StreamGate similarity gate: scored appends
-    * land on a parquet sink, then the per-query top-k is ranked
-    * DISTRIBUTEDLY over the sink table via the bounded-buffer
-    * TopKAggregator (shuffle ≤ k·partitions rows per query) — the
-    * end-to-end plan a real deployment runs. Equality with the
-    * driver-capture gate variant is pinned in spec.
-    */
-  def similarityTopKViaSink(spark: SparkSession, dir: String, outPath: String): DataFrame = {
-    val sunk = runAppendToParquet(spark, similarityScoredStream(spark, dir), outPath)
-    graft.operators.Similarity.topKPerQuery(sunk, 5)
-  }
-
-  /** Sink-path twin of the StreamGate interval-join gate: joined
-    * appends land on a parquet sink and are read back as a table.
-    */
-  def intervalJoinViaSink(spark: SparkSession, dir: String, outPath: String): DataFrame =
-    runAppendToParquet(spark, intervalJoinStream(spark, dir), outPath)
-
-  /** The dedup lineage [[streamDedupViaSink]] and the StreamGate sink
-    * bundle share.
-    */
-  private[streaming] def streamDedupLineage(spark: SparkSession, dir: String): DataFrame =
-    dedupLineageOver(eventsStream(spark, dir))
-
-  private def dedupLineageOver(src: DataFrame): DataFrame =
-    src
-      .withWatermark("ts", "90 days")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select(col("user_id"), col("event_type"))
-
-  /** The [[streamDedupViaSink]] lineage over a READ-LIMITED events
-    * source (`maxFilesPerTrigger`), so AvailableNow processes the
-    * corpus as several micro-batches instead of one — the surface the
-    * restart-under-load proof drives (StreamingAdvancedSpec): kill
-    * after batch k, restart from the same checkpoint, and the landed
-    * set must equal the uninterrupted run's. Stateful on purpose —
-    * the dedup state store must survive the restart, not just the
-    * offset log.
-    */
-  def streamDedupChunked(spark: SparkSession, dir: String, maxFilesPerTrigger: Int): DataFrame =
-    dedupLineageOver(eventsStreamChunked(spark, dir, maxFilesPerTrigger))
-
-  /** [[eventsStream]] with a `maxFilesPerTrigger` read limit so
-    * AvailableNow processes the corpus as several micro-batches —
-    * the surface the restart-under-load proof and the stateful
-    * scaling rehearsal drive (state must ACCUMULATE across batches
-    * to be worth measuring). Same read path as eventsStream (nanos
-    * conf + layout dispatch + contracts — the r10 review caught a
-    * hand-rolled copy that skipped both).
-    */
-  def eventsStreamChunked(spark: SparkSession, dir: String, maxFilesPerTrigger: Int): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fallback = new StructType()
-      .add("event_id", LongType)
-      .add("ts", TimestampType)
-      .add("user_id", LongType)
-      .add("event_type", StringType)
-      .add("value", DoubleType)
-      .add("props", StringType)
-    tableStream(
-      spark,
-      dir,
-      "events",
-      fallback,
-      Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString),
-    )
-  }
-
-  /** Streaming exact dedup through the production sink path: the
+  /** Streaming exact dedup, run by the StreamGate sink bundle: the
     * event stream deduplicated on (user_id, event_type) with
     * `dropDuplicatesWithinWatermark`, first occurrences appended
     * straight to a distributed parquet sink — the ST6 semantics
@@ -385,8 +273,36 @@ object StreamingQueries {
     * the real dedup horizon and state stays bounded by eviction,
     * which is exactly what this operator exists to guarantee.
     */
-  def streamDedupViaSink(spark: SparkSession, dir: String, outPath: String): DataFrame =
-    runAppendToParquet(spark, streamDedupLineage(spark, dir), outPath)
+  private[streaming] def streamDedupLineage(spark: SparkSession, dir: String): DataFrame =
+    dedupLineageOver(eventsStream(spark, dir))
+
+  private def dedupLineageOver(src: DataFrame): DataFrame =
+    src
+      .withWatermark("ts", "90 days")
+      .dropDuplicatesWithinWatermark("user_id", "event_type")
+      .select(col("user_id"), col("event_type"))
+
+  /** The [[streamDedupLineage]] over a READ-LIMITED events
+    * source (`maxFilesPerTrigger`), so AvailableNow processes the
+    * corpus as several micro-batches instead of one — the surface the
+    * restart-under-load proof drives (StreamingAdvancedSpec): kill
+    * after batch k, restart from the same checkpoint, and the landed
+    * set must equal the uninterrupted run's. Stateful on purpose —
+    * the dedup state store must survive the restart, not just the
+    * offset log.
+    */
+  def streamDedupChunked(spark: SparkSession, dir: String, maxFilesPerTrigger: Int): DataFrame =
+    dedupLineageOver(eventsStreamChunked(spark, dir, maxFilesPerTrigger))
+
+  /** [[eventsStream]] with a `maxFilesPerTrigger` read limit so
+    * AvailableNow processes the corpus as several micro-batches —
+    * the surface the restart-under-load proof and the stateful
+    * scaling rehearsal drive (state must ACCUMULATE across batches
+    * to be worth measuring). Same read path as eventsStream (nanos
+    * conf, fallback schema, layout dispatch and contracts).
+    */
+  def eventsStreamChunked(spark: SparkSession, dir: String, maxFilesPerTrigger: Int): DataFrame =
+    eventsStreamWith(spark, dir, Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString))
 
   /** Documents table as a file stream (declared schema, as all
     * streaming file sources require).
@@ -503,9 +419,9 @@ object StreamingQueries {
     *     half updates still-live windows — the changelog shows both
     *     fates;
     *  3. update-mode changelog to explicit-batch-id subdirectories
-    *     (the ChangelogCapture file contract: an at-least-once retry
-    *     overwrites its own delivery), collapsed to the final value
-    *     per window by max batch id.
+    *     ([[BatchDirSink]]: an at-least-once retry overwrites its own
+    *     delivery), collapsed to the final value per window by max
+    *     batch id.
     *
     * The DuckDB oracle replicates the WATERMARK RULE itself: per-era
     * max event time (over ALL rows of the era — the stats node sees
@@ -528,7 +444,8 @@ object StreamingQueries {
     val (agg, root) = lateEvictionStagedAgg(spark, dir)
     val outDir = s"$root/out"
     val latest = runToFinalViaSink(spark, agg, Seq("window_start_us"), outDir)
-    require(batchDirs(outDir).nonEmpty, "eviction gate landed no changelog batches")
+    require(new BatchDirSink(outDir, agg.schema).batchIds.nonEmpty,
+      "eviction gate landed no changelog batches")
     latest
   }
 
@@ -695,41 +612,24 @@ object StreamingQueries {
 
   /** Streaming quality ROUTER — one stream, two sinks, one pass: each
     * micro-batch of documents is scored with the map-side Gopher keep
-    * rule and split into a keep sink and a reject sink inside a single
-    * foreachBatch (the batch is persisted so the two writes share one
-    * source scan). This is the standard multi-sink routing shape a
-    * curation pipeline runs at ingest: accepted docs flow to training
-    * storage, rejects to a quarantine table for audit, neither path
-    * re-reads the source.
+    * rule and split into a keep sink and a reject sink by one
+    * [[BatchSink.start]] (the batch is persisted so the two writes
+    * share one source scan). This is the standard multi-sink routing
+    * shape a curation pipeline runs at ingest: accepted docs flow to
+    * training storage, rejects to a quarantine table for audit,
+    * neither path re-reads the source.
     *
-    * Exactly-once: each batch writes to its OWN subdirectory
-    * (`b<batchId>`) in overwrite mode, so an at-least-once foreachBatch
-    * retry replaces that batch's output instead of appending a
-    * duplicate — the same explicit-batch-id contract as
-    * [[VotePipeline.ChangelogCapture]], applied to files.
-    *
-    * Returns the keep-side table (doc_id, source), read back from the
-    * sink.
+    * Exactly-once: both sides are [[BatchDirSink]]s, so an
+    * at-least-once foreachBatch retry replaces that batch's output
+    * instead of appending a duplicate. Starts without awaiting; the
+    * caller owns the conf bracket, as with [[startAppendToParquet]],
+    * and reads each side back through [[qualityRouteSinks]].
     */
-  def qualityRouteViaSink(spark: SparkSession, dir: String, outDir: String): DataFrame = {
-    // stateless routing: no state stores and no no-data batches, but
-    // keep sink parallelism consistent with the other gate streams
-    StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
-      startQualityRoute(spark, dir, outDir).awaitTermination()
-    }
-    readQualityRouteKeep(spark, outDir)
-  }
-
-  /** Start (without awaiting) the two-sink quality router. The caller
-    * owns the conf bracket, as with [[startAppendToParquet]].
-    */
-  private[streaming] def startQualityRoute(
+  private[graft] def startQualityRoute(
       spark: SparkSession,
       dir: String,
       outDir: String,
   ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val keepPath = s"$outDir/keep"
-    val rejectPath = s"$outDir/reject"
     // a NULL keep (NULL text) must still route somewhere or the
     // keep ∪ reject = corpus partition contract silently drops the
     // doc — quarantine it on the reject side
@@ -739,28 +639,19 @@ object StreamingQueries {
         col("source"),
         coalesce(graft.operators.TextAnalysis.gopherKeep(col("text")), lit(false)).as("keep"),
       )
-    routed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        batch.persist()
-        try {
-          batch.filter(col("keep")).select("doc_id", "source")
-            .write.mode("overwrite").parquet(s"$keepPath/b$batchId")
-          batch.filter(!col("keep")).select("doc_id", "source")
-            .write.mode("overwrite").parquet(s"$rejectPath/b$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-route"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    val (keep, reject) = qualityRouteSinks(outDir)
+    BatchSink.start(
+      routed, "route", None, availableNow = true,
+      ((b: DataFrame) => b.filter(col("keep")).select("doc_id", "source")) -> keep,
+      ((b: DataFrame) => b.filter(!col("keep")).select("doc_id", "source")) -> reject)
   }
 
-  /** Read back the keep side of a completed quality-route run. */
-  private[streaming] def readQualityRouteKeep(spark: SparkSession, outDir: String): DataFrame = {
-    val keepPath = s"$outDir/keep"
-    val outSchema = new StructType().add("doc_id", LongType).add("source", StringType)
-    val dirs = batchDirs(keepPath).map(_.getPath)
-    if (dirs.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    else spark.read.schema(outSchema).parquet(dirs: _*)
+  /** The quality router's (keep, reject) sinks under `outDir`, each of
+    * (doc_id, source) rows.
+    */
+  private[graft] def qualityRouteSinks(outDir: String): (BatchDirSink, BatchDirSink) = {
+    val schema = new StructType().add("doc_id", LongType).add("source", StringType)
+    (new BatchDirSink(s"$outDir/keep", schema), new BatchDirSink(s"$outDir/reject", schema))
   }
 
   /** Streaming twin of RelationalQueries.latestEventPerUser: the CDC
@@ -1277,16 +1168,11 @@ object StreamingQueries {
     * refresh (drift) is the batch [[graft.operators.PqIndex.codebook]]
     * rebuild, exactly like the LSH band-index refresh gate.
     */
-  def pqEncodeStream(spark: SparkSession, dir: String): DataFrame = {
-    val fallback = new StructType()
-      .add("vec_id", LongType)
-      .add("embedding", ArrayType(FloatType))
-      .add("label", IntegerType)
+  def pqEncodeStream(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PqIndex.encodeAgainst(
-      tableStream(spark, dir, "embeddings", fallback).select(col("vec_id"), col("embedding")),
+      tableStream(spark, dir, "embeddings", EmbeddingsFallback).select(col("vec_id"), col("embedding")),
       graft.operators.PqIndex.centroidsRow(spark, dir),
     )
-  }
 
   def pqEncodeViaSink(spark: SparkSession, dir: String): DataFrame =
     runAppendToParquet(spark, pqEncodeStream(spark, dir), scratchSinkDir("pqencode") + "/out")
@@ -1305,11 +1191,7 @@ object StreamingQueries {
   def pqReencodeStream(spark: SparkSession, dir: String): DataFrame = {
     val fires = graft.operators.PqIndex.refreshFires(spark, dir)
     val cutoff = graft.operators.PqIndex.refreshCutoff(spark, dir)
-    val fallback = new StructType()
-      .add("vec_id", LongType)
-      .add("embedding", ArrayType(FloatType))
-      .add("label", IntegerType)
-    val delta = tableStream(spark, dir, "embeddings", fallback)
+    val delta = tableStream(spark, dir, "embeddings", EmbeddingsFallback)
       .filter(lit(fires) && col("vec_id") > cutoff)
       .select(col("vec_id"), col("embedding"))
     graft.operators.PqIndex
@@ -1346,11 +1228,7 @@ object StreamingQueries {
     val bank = graft.sources.Tables(spark, dir, "embeddings")
       .filter(splitOf(col("vec_id")) === "test")
       .select(col("label"), col("vec_id").as("test_vec_id"), col("embedding").as("te"))
-    val fallback = new StructType()
-      .add("vec_id", LongType)
-      .add("embedding", ArrayType(FloatType))
-      .add("label", IntegerType)
-    val arriving = tableStream(spark, dir, "embeddings", fallback)
+    val arriving = tableStream(spark, dir, "embeddings", EmbeddingsFallback)
       .filter(col("vec_id") > cutoff && splitOf(col("vec_id")) =!= "test")
       .select(col("label"), col("vec_id").as("cand_vec_id"), col("embedding").as("ae"))
     arriving

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.VotingOps
 import graft.sources.VoteIngest
@@ -33,7 +33,8 @@ object VotePipeline {
     * format = "kafka": the production path of the reference job
     * (spark-streaming.py:83-103) — aggregate rows serialize via
     * [[toChangelogValue]] and land on `topic`; checkpoint per query.
-    * Other formats (memory/parquet/console) take the rows as-is.
+    * Other formats take the rows as-is; they must accept update mode
+    * (memory, console — the file sinks are append-only).
     */
   def startQuery(
       agg: DataFrame,
@@ -74,63 +75,18 @@ object VotePipeline {
   def aggregates(parsed: DataFrame): (DataFrame, DataFrame) =
     (VotingOps.votesPerCandidate(parsed), VotingOps.turnoutByLocation(parsed))
 
-  /** Single-pass fan-out: ONE streaming query reads the source once
-    * per micro-batch and feeds BOTH aggregations via foreachBatch —
-    * unlike the reference's two independent queries, which each
-    * re-read the whole topic (SURVEY ST7). At 100 TB the source scan
-    * is the dominant cost, so halving it matters; the trade is that
-    * both sinks now share one checkpoint/failure domain.
-    *
-    * Running totals are kept correct across micro-batches by
-    * aggregating each batch and merging into the sink tables with
-    * batch-local recompute: foreachBatch receives the NEW rows only,
-    * so we accumulate into two in-memory stores keyed like the
-    * reference's changelog consumers would.
-    *
-    * Retry contract: foreachBatch is AT-LEAST-ONCE — after a failure
-    * the same micro-batch is re-delivered with the SAME batch id. The
-    * callbacks therefore receive `(partials, batchId)` and MUST
-    * upsert keyed by batch id (replace that batch's partials, never
-    * append), or a retried batch double-counts. StreamGate's fan-out
-    * pass (one [[ChangelogCapture]] per partial) is the model
-    * implementation; the retry spec in StreamingAdvancedSpec pins the
-    * semantics. The checkpoint is a throwaway scratch dir
-    * ([[StreamGate.scratchDir]]).
-    */
-  def startFanOut(
-      parsed: DataFrame,
-      writeVotes: (DataFrame, Long) => Unit,
-      writeTurnout: (DataFrame, Long) => Unit,
-  ): StreamingQuery = {
-    parsed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", StreamGate.scratchDir("graft-ckpt-fanout"))
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.persist()
-        try {
-          writeVotes(VotingOps.votesPerCandidate(b.toDF()), batchId)
-          writeTurnout(VotingOps.turnoutByLocation(b.toDF()), batchId)
-        } finally { b.unpersist(); () }
-      }
-      .start()
-  }
-
-  /** Update-mode changelog capture keyed by the EXPLICIT foreachBatch
-    * batch id — what a consumer of the reference's output topics must
-    * do to materialize final values (SURVEY §2.7 ST3). Update mode
-    * emits each changed key at most once per micro-batch, so "row
-    * with the max batch id per key" is the exact latest-value
-    * collapse; batches are stored REPLACED per invocation, so an
-    * at-least-once foreachBatch retry overwrites its own delivery
-    * instead of double-counting. (This retired the earlier
-    * monotonically_increasing_id-over-the-sink-scan collapse, which
-    * only encoded arrival order through a memory-sink partition
-    * layout detail.)
+  /** The driver-side [[BatchSink]]: each micro-batch's rows are
+    * collected and stored under the batch id foreachBatch delivers,
+    * which is what a consumer of the reference's output topics must do
+    * to materialize final values (SURVEY §2.7 ST3). The batch-id
+    * contract (a retry replaces its own delivery; latest = max batch
+    * id per key) is [[BatchSink]]'s.
     *
     * Captured volume is the changelog itself — bounded by changed
     * keys per batch for update-mode aggregates, which is the only
-    * shape this harness class serves. Append-mode streams at scale go
-    * to a real sink instead (see StreamingQueries sink variants).
+    * shape this sink serves. A changelog whose keys scale with the
+    * corpus lands on a [[BatchDirSink]], and an append stream on the
+    * parquet sink ([[StreamingQueries.runAppendToParquet]]).
     *
     * That bounded-key assumption is ENFORCED, not trusted:
     * `maxRowsPerBatch` caps each collected micro-batch, and a batch
@@ -142,20 +98,20 @@ object VotePipeline {
     * the collect reads one partition, and cap + 1 rows also bound the
     * bytes a batch sends to the driver.
     */
-  final class ChangelogCapture private[streaming] (
+  final class ChangelogCapture private[graft] (
       schema: org.apache.spark.sql.types.StructType,
-      maxRowsPerBatch: Int = ChangelogCapture.DefaultMaxRowsPerBatch) {
+      maxRowsPerBatch: Int = ChangelogCapture.DefaultMaxRowsPerBatch) extends BatchSink {
     private val batches =
       scala.collection.mutable.LinkedHashMap.empty[Long, Array[org.apache.spark.sql.Row]]
 
-    private[streaming] def write(batch: DataFrame, batchId: Long): Unit = {
+    def write(batch: DataFrame, batchId: Long): Unit = {
       val rows = batch.limit(maxRowsPerBatch + 1).collect()
       if (rows.length > maxRowsPerBatch)
         throw new IllegalStateException(
           s"ChangelogCapture: micro-batch $batchId exceeds maxRowsPerBatch=" +
             s"$maxRowsPerBatch captured rows. This harness sink is for " +
             "bounded-key update-mode changelogs only; route unbounded " +
-            "streams to a distributed sink (StreamingQueries sink variants).")
+            "streams to a distributed sink (BatchDirSink).")
       synchronized { batches(batchId) = rows; () }
     }
 
@@ -165,7 +121,6 @@ object VotePipeline {
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     }
 
-    /** Final value per key: the row with the max batch id per key. */
     def latest(spark: SparkSession, keyCols: Seq[String]): DataFrame = synchronized {
       val keyIdx = keyCols.map(schema.fieldIndex)
       val rows = batches.toSeq
@@ -188,11 +143,10 @@ object VotePipeline {
 
   /** Start one update-mode changelog query whose sink is a
     * [[ChangelogCapture]]; returns the running query and the capture.
-    * The capture replaces the old memory-sink harness path (retired):
-    * the batch id is explicit, so the collapse is a contract rather
-    * than a partition-layout accident. The checkpoint is a throwaway
-    * scratch dir (RAM-backed where available — streaming checkpoints
-    * are fsync-heavy on disk-backed tmp).
+    * It starts through [[BatchSink.start]], the program's one
+    * foreachBatch start, and its checkpoint is a throwaway scratch dir
+    * (RAM-backed where available — streaming checkpoints are
+    * fsync-heavy on disk-backed tmp).
     *
     * State is sized to the contract: the query starts with one shuffle
     * partition, whatever the caller's session (or a gate's
@@ -214,16 +168,8 @@ object VotePipeline {
       maxRowsPerBatch: Int = ChangelogCapture.DefaultMaxRowsPerBatch,
   ): (StreamingQuery, ChangelogCapture) = {
     val capture = new ChangelogCapture(agg.schema, maxRowsPerBatch)
-    val checkpoint = StreamGate.scratchDir(s"graft-ckpt-$queryName")
-    val writer = agg.writeStream
-      .outputMode("update")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        capture.write(batch.toDF(), batchId)
-      }
     val q = StreamGate.withConf(agg.sparkSession, "spark.sql.shuffle.partitions" -> "1") {
-      (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+      BatchSink.start(agg, queryName, Some(queryName), availableNow, (identity[DataFrame] _) -> capture)
     }
     (q, capture)
   }

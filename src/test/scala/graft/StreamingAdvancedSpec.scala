@@ -3,14 +3,14 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.VotingOps
-import graft.streaming.{Sessionize, VotePipeline}
+import graft.streaming.{BatchDirSink, BatchSink, Sessionize, StreamGate, StreamingQueries, VotePipeline}
 import graft.util.ScratchDirs
 
 /** Advanced streaming semantics: checkpoint/restart exactly-once
@@ -49,20 +49,61 @@ class StreamingAdvancedSpec extends AnyFunSuite {
   }
 
   test("sink-path changelog collapse equals the in-memory capture path") {
-    // runToFinalViaSink (per-batch overwrite dirs + distributed
-    // max-batch-id collapse) must produce exactly what the bounded
-    // in-memory capture produces on the same update-mode lineage —
-    // the pin that lets corpus-scaling-key gates ride the sink path
+    // the same update-mode lineage through the one foreachBatch start
+    // into each sink: per-batch overwrite dirs + distributed
+    // max-batch-id collapse must produce exactly what the bounded
+    // in-memory capture produces — the pin that lets corpus-scaling-key
+    // gates ride the sink path
     val dir = "/root/testdata/sf0.001"
     def agg = graft.operators.RelationalQueries
       .latestEventPerKey(graft.streaming.StreamingQueries.eventsStream(spark, dir))
-    val viaCapture = graft.streaming.StreamingQueries
-      .runToFinal(spark, agg, Seq("user_id")).collect().toSet
+    def run(sink: BatchSink): Set[Row] = {
+      StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
+        BatchSink.start(agg, "rtf-spec", None, availableNow = true, (identity[DataFrame] _) -> sink)
+          .awaitTermination()
+      }
+      sink.latest(spark, Seq("user_id")).collect().toSet
+    }
+    val viaCapture = run(new VotePipeline.ChangelogCapture(agg.schema))
     val out = ScratchDirs.create("graft-rtf-sink").toString + "/out"
-    val viaSink = graft.streaming.StreamingQueries
-      .runToFinalViaSink(spark, agg, Seq("user_id"), out).collect().toSet
+    val viaSink = run(new BatchDirSink(out, agg.schema))
     assert(viaSink == viaCapture, "sink-path collapse diverged from the capture path")
     assert(viaSink.nonEmpty)
+  }
+
+  test("both batch sinks replace a retried batch id and read no stray directory") {
+    import spark.implicits._
+    val schema = Seq(("k", 0L)).toDF("key", "v").schema
+    // batch 1 is delivered twice: the retry carries different rows and
+    // must replace the first delivery, never add to it
+    val deliveries = Seq(
+      0L -> Seq(("a", 1L), ("b", 1L)),
+      1L -> Seq(("a", 9L), ("c", 9L)),
+      1L -> Seq(("a", 2L), ("c", 1L)),
+      2L -> Seq(("b", 3L)),
+    )
+    val root = ScratchDirs.create("graft-sink-agree").toString
+    val capture = new VotePipeline.ChangelogCapture(schema)
+    val dirSink = new BatchDirSink(root, schema)
+    // a staging leftover and a non-batch directory, both readable
+    // parquet: a reader that picked either up would see key "x"
+    Seq(("x", 7L)).toDF("key", "v").write.parquet(s"$root/_temporary/0")
+    Seq(("x", 8L)).toDF("key", "v").write.parquet(s"$root/stray")
+    deliveries.foreach { case (id, rows) =>
+      val batch = rows.toDF("key", "v")
+      capture.write(batch, id)
+      dirSink.write(batch, id)
+    }
+    def bag(df: DataFrame): Map[(String, Long), Int] =
+      df.collect().toSeq.map(r => (r.getString(0), r.getLong(1))).groupBy(identity).view.mapValues(_.size).toMap
+    val expectedLog = Seq(("a", 1L), ("b", 1L), ("a", 2L), ("c", 1L), ("b", 3L))
+      .groupBy(identity).view.mapValues(_.size).toMap
+    assert(bag(capture.changelog(spark)) == expectedLog)
+    assert(bag(dirSink.changelog(spark)) == expectedLog)
+    val expectedLatest = Map(("a", 2L) -> 1, ("b", 3L) -> 1, ("c", 1L) -> 1)
+    assert(bag(capture.latest(spark, Seq("key"))) == expectedLatest)
+    assert(bag(dirSink.latest(spark, Seq("key"))) == expectedLatest)
+    assert(dirSink.batchIds == Seq(0L, 1L, 2L))
   }
 
   test("watermark eviction gate: late rows provably exist and are provably dropped") {
@@ -324,41 +365,34 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[String]
     val parsed = VotePipeline.parsedStream(stream.toDF().select($"value"))
-    // the batch-id contract: partials are stored KEYED BY BATCH ID and
-    // replaced per delivery, so an at-least-once re-delivery of a
-    // batch cannot double-count (totals are the sum over batch ids)
-    val votesAcc = scala.collection.mutable.Map.empty[Long, Map[String, Long]]
-    val turnoutAcc = scala.collection.mutable.Map.empty[Long, Map[String, Long]]
-    var writeCalls = 0
-    val q = VotePipeline.startFanOut(
-      parsed,
-      (votes, batchId) => {
-        writeCalls += 1
-        votesAcc(batchId) = votes.collect().map { r =>
-          val k = Option(r.getAs[String]("candidate_id")).getOrElse("null")
-          val v = if (r.isNullAt(r.fieldIndex("total_votes"))) 0L else r.getAs[Long]("total_votes")
-          k -> v
-        }.toMap
-      },
-      (turnout, batchId) => turnoutAcc(batchId) =
-        turnout.collect().map(r => r.getAs[String]("state") -> r.getAs[Long]("count")).toMap,
-    )
+    // the StreamGate bundle's shape: one query, each micro-batch
+    // persisted once and aggregated into two per-batch partials
+    val votesCap = new VotePipeline.ChangelogCapture(VotingOps.votesPerCandidate(parsed).schema)
+    val turnoutCap = new VotePipeline.ChangelogCapture(VotingOps.turnoutByLocation(parsed).schema)
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val q = BatchSink.start(
+      parsed, "fanout-spec", None, availableNow = false,
+      (VotingOps.votesPerCandidate _) -> votesCap, (VotingOps.turnoutByLocation _) -> turnoutCap)
     stream.addData(voteJson(1, "Illinois", 1), voteJson(2, "Ohio", 1))
     q.processAllAvailable()
     stream.addData(voteJson(3, "Illinois", 2), voterJson(4, "Illinois"))
     q.processAllAvailable()
     q.stop()
-    def total(acc: scala.collection.mutable.Map[Long, Map[String, Long]], k: String): Long =
-      acc.values.map(_.getOrElse(k, 0L)).sum
+    def votes(): Map[String, Long] =
+      votesCap.changelog(spark).filter($"candidate_id".isNotNull)
+        .groupBy("candidate_id").agg(sum("total_votes"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // per-batch partials summed across batch ids = whole-stream totals
-    assert(total(votesAcc, "c1") == 2L && total(votesAcc, "c2") == 1L)
-    assert(total(turnoutAcc, "Illinois") == 3L && total(turnoutAcc, "Ohio") == 1L)
-    // simulate the at-least-once retry: re-delivering batch 0's
-    // partials under the same batch id REPLACES, so totals are stable
-    val batch0Votes = votesAcc(0L)
-    votesAcc(0L) = batch0Votes // keyed upsert, as the contract requires
-    assert(total(votesAcc, "c1") == 2L, "retried batch must not double-count")
-    assert(writeCalls == votesAcc.size, s"one votes write per distinct batch id, got $writeCalls")
+    assert(votes() == Map("c1" -> 2L, "c2" -> 1L))
+    val turnout = turnoutCap.changelog(spark).groupBy("state").agg(sum("count"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(turnout == Map("Illinois" -> 3L, "Ohio" -> 1L))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore, "a fan-out batch stayed persisted")
+    // the at-least-once retry: batch 0 re-delivered under the same
+    // batch id replaces its partials, so totals are stable
+    val batch0 = VotePipeline.parsedStream(Seq(voteJson(1, "Illinois", 1), voteJson(2, "Ohio", 1)).toDF("value"))
+    votesCap.write(VotingOps.votesPerCandidate(batch0), 0L)
+    assert(votes() == Map("c1" -> 2L, "c2" -> 1L), "retried batch must not double-count")
   }
 
   test("stream gate bundle yields empty typed results when the source has no files to stream") {
@@ -385,12 +419,10 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     // zero-batch AvailableNow run leaves only the sink's metadata dir
     // and the schema'd read-back must yield an empty typed relation,
     // not a path/inference error
-    val ijOut = ScratchDirs.create("graft-empty-ij").toString + "/out"
-    val ijSink = graft.streaming.StreamingQueries.intervalJoinViaSink(spark, dir, ijOut)
+    val ijSink = graft.streaming.StreamGate.intervalJoinSink(spark, dir)
     assert(ijSink.count() == 0)
     assert(ijSink.schema.fieldNames.toSeq == Seq("event_a", "event_b", "type_a", "type_b"))
-    val simOut = ScratchDirs.create("graft-empty-sim").toString + "/out"
-    assert(graft.streaming.StreamingQueries.similarityTopKViaSink(spark, dir, simOut).count() == 0)
+    assert(graft.streaming.StreamGate.similarityTopKSink(spark, dir).count() == 0)
   }
 
   test("stream gate bundle runs green on the RocksDB state store with identical results") {
@@ -415,33 +447,9 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     }
   }
 
-  test("production parquet-sink append path equals the driver-capture gate path") {
-    val dir = "/root/testdata/sf0.001"
-    // interval join: appends written to a distributed parquet sink and
-    // read back — must equal the bundle's foreachBatch-capture variant
-    val ijOut = ScratchDirs.create("graft-sink-ij").toString + "/out"
-    val ijSink = graft.streaming.StreamingQueries.intervalJoinViaSink(spark, dir, ijOut)
-    val ijGate = graft.streaming.StreamGate.intervalJoin(spark, dir)
-    assert(ijSink.count() == ijGate.count(), "sink path lost or duplicated appended rows")
-    assert(
-      ijSink.except(ijGate).isEmpty && ijGate.except(ijSink).isEmpty,
-      "sink-path interval join diverged from the capture-path gate",
-    )
-    // similarity: sink-table rank via the bounded TopKAggregator must
-    // equal the gate's post-completion window rank
-    val simOut = ScratchDirs.create("graft-sink-sim").toString + "/out"
-    val simSink = graft.streaming.StreamingQueries.similarityTopKViaSink(spark, dir, simOut)
-    val simGate = graft.streaming.StreamGate.similarityTopK(spark, dir)
-    assert(
-      simSink.except(simGate).isEmpty && simGate.except(simSink).isEmpty,
-      "sink-path similarity top-k diverged from the capture-path gate",
-    )
-  }
-
   test("streaming dedup through the parquet sink yields exactly the batch distinct key set") {
     val dir = "/root/testdata/sf0.001"
-    val out = ScratchDirs.create("graft-sink-dd").toString + "/out"
-    val sunk = graft.streaming.StreamingQueries.streamDedupViaSink(spark, dir, out)
+    val sunk = graft.streaming.StreamGate.streamDedupSink(spark, dir)
     val batch = spark.read.parquet(s"$dir/events.parquet")
       .select("user_id", "event_type")
       .distinct()
@@ -585,11 +593,22 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     assert(sa == sb, s"streamed probe diverged: ${sa.diff(sb)} / ${sb.diff(sa)}")
   }
 
+  /** Run the quality router the sink bundle runs over `dir` and read
+    * back its (keep, reject) sides through their batch sinks.
+    */
+  def route(dir: String, prefix: String): (DataFrame, DataFrame) = {
+    val out = ScratchDirs.create(prefix).toString
+    StreamGate.withConf(spark, StreamGate.GateStreamConf: _*) {
+      StreamingQueries.startQualityRoute(spark, dir, out).awaitTermination()
+    }
+    val (keep, reject) = StreamingQueries.qualityRouteSinks(out)
+    (keep.changelog(spark), reject.changelog(spark))
+  }
+
   test("streaming quality router partitions the corpus: keep sink == batch rule, keep ∪ reject = all") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val out = ScratchDirs.create("graft-sink-route").toString
-    val keep = graft.streaming.StreamingQueries.qualityRouteViaSink(spark, dir, out)
+    val (keep, reject) = route(dir, "graft-sink-route")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val expectedKeep = docs
       .filter(graft.operators.TextAnalysis.gopherKeep(col("text")))
@@ -600,9 +619,6 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     )
     // reject sink holds exactly the complement — one pass covered
     // every doc exactly once
-    val reject = spark.read
-      .schema(keep.schema)
-      .parquet(new java.io.File(s"$out/reject").listFiles().filter(_.isDirectory).map(_.getPath).toIndexedSeq: _*)
     assert(keep.count() + reject.count() == docs.count())
     assert(keep.join(reject, Seq("doc_id"), "inner").isEmpty, "a doc reached both sinks")
   }
@@ -625,11 +641,7 @@ class StreamingAdvancedSpec extends AnyFunSuite {
     val part = new java.io.File(s"$stage/w").listFiles()
       .find(f => f.getName.endsWith(".parquet")).get
     Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    val out = ScratchDirs.create("graft-null-route").toString
-    val keep = graft.streaming.StreamingQueries.qualityRouteViaSink(spark, dir, out)
-    val reject = spark.read
-      .schema(keep.schema)
-      .parquet(new java.io.File(s"$out/reject").listFiles().filter(_.isDirectory).map(_.getPath).toIndexedSeq: _*)
+    val (keep, reject) = route(dir, "graft-null-route")
     assert(keep.collect().map(_.getLong(0)).toSet == Set(0L))
     assert(reject.collect().map(_.getLong(0)).toSet == Set(1L, 2L), "NULL text must land in quarantine")
   }

@@ -220,6 +220,35 @@ class StreamingVotingSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("the production start path writes an update-mode changelog; its payload is to_json(struct(*))") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[String]
+    val parsed = VotePipeline.parsedStream(stream.toDF().select($"value"))
+    val votes = VotePipeline.aggregates(parsed)._1.select("candidate_id", "total_votes")
+    val checkpoint = ScratchDirs.create("graft-start-query").toString
+    // the memory sink takes update mode offline, where production
+    // names "kafka" and a topic
+    val q = VotePipeline.startQuery(votes, "memory", "start_query_test", checkpoint)
+    try {
+      stream.addData(voteJson(1, "Ohio", 1), voteJson(2, "Ohio", 2))
+      q.processAllAvailable()
+      stream.addData(voteJson(3, "Ohio", 1))
+      q.processAllAvailable()
+    } finally q.stop()
+    // update mode: each batch emits only the keys it changed
+    val rows = spark.table("start_query_test").collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(rows.sorted == Seq("c1" -> 1L, "c1" -> 2L, "c2" -> 1L))
+
+    // the value column the kafka format writes (spark-streaming.py:83-84)
+    val agg = Seq(("c1", 2L), (null: String, 0L)).toDF("candidate_id", "total_votes")
+    val payload = VotePipeline.toChangelogValue(agg)
+    assert(payload.columns.toSeq == Seq("value"))
+    assert(payload.as[String].collect().toSeq ==
+      agg.selectExpr("to_json(struct(*))").as[String].collect().toSeq)
+    assert(payload.as[String].collect().toSeq == Seq("""{"candidate_id":"c1","total_votes":2}""", """{"total_votes":0}"""))
+  }
+
   test("malformed JSON is captured, not silently dropped") {
     import spark.implicits._
     val df = Seq("{not json at all", voterJson(1, "Illinois")).toDF("value")
